@@ -72,8 +72,8 @@ def q_retention_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     in a second exchange at per-user-week grain, far below event
     grain. Replaces the r4 form's 2 scans + 3 event-grain exchanges
     (user-min, join-back, distinct-collapse); the r6 audit's
-    alternatives predate this shape. MEASURED (round 8,
-    tools/bench_funnel_ab ABBA, sf10, 10 reps, values equal): 1.03x —
+    alternatives predate this shape. MEASURED (round 8, ABBA, sf10,
+    10 reps, values equal): 1.03x —
     a wash on local[32] where the page cache makes the second scan
     free; kept anyway because at real scale the fact scan dominates
     and this shape pays it once and never exchanges at event grain.
@@ -241,8 +241,8 @@ def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     array_min(filter(...)) folds — t1 = first click AFTER t0,
     t2 = first purchase AFTER t1 — replacing the r4 form's three
     type-filtered groupBy-MIN passes chained by joins (3 scans +
-    3 shuffles). MEASURED (round 8, tools/bench_funnel_ab ABBA,
-    sf10, values equal): single-pass median 3.64 s vs 7.14 s r4 form
+    3 shuffles). MEASURED (round 8, ABBA, sf10, values equal):
+    single-pass median 3.64 s vs 7.14 s r4 form
     = 0.51x. Per-user arrays hold only that user's clicks/
     purchases (bounded fan-in per user at any corpus scale; partial
     objectHashAggregate keeps map-side memory flat). The 3-row step

@@ -364,8 +364,8 @@ def q_power_iteration_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
     (and column pruning makes the repeated subtrees non-canonical —
     no ReuseExchange), the ENTIRE Gram subtree planned and EXECUTED
     twice per run: 34 Exchanges, 8 scans, the X^T X corpus kernel run
-    2×, the stats posexplode run 4× (plans/r13/
-    emb_power_iteration_pc_before.txt). Fused form: ONE corpus pass —
+    2×, the stats posexplode run 4× (r12 physical plan). Fused
+    form: ONE corpus pass —
     the X^T X kernel also emits per-batch column sums (j=0 rows) and
     the row count (i=j=0), replacing the posexplode stats pass — one
     (i,j) partial-sum exchange, then mean-centering + BOTH
@@ -377,8 +377,8 @@ def q_power_iteration_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
     /1e10 → /nrm → *1e6 order, int64 matvec), so every integer and
     double is bit-identical — pinned doc-for-doc against the retained
     Column formulation in tests/test_round13_opt.py and by the
-    unchanged oracle. Measured (ABBA, toPandas protocol,
-    tools/bench_r13_ab.py): sf0.1 1.65→0.67 s, sf1 1.57→0.62 s,
+    unchanged oracle. Measured (ABBA, toPandas protocol): sf0.1
+    1.65→0.67 s, sf1 1.57→0.62 s,
     sf10 11.6→7.5 s (contended epoch, candidate never lost a pair).
     Plan: 34 Exchanges → 2, 8 scans → 1, MapInPandas×2 → ×2 (one
     corpus kernel + one d²-row solver), zero broadcasts/windows.
@@ -462,6 +462,12 @@ def q_power_iteration_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
             w = gu @ vq  # exact int64 matvec (overflow bounds above)
             u = half_away(w.astype(np.float64) / 10000000000)
             nrm = np.sqrt(float((u * u).sum()))
+            if nrm == 0:
+                # degenerate corpus (e.g. identical embeddings) has no
+                # principal direction: define the loadings as 0 rather
+                # than cast 0/0 = NaN to int64 (INT64_MIN)
+                vq = np.zeros(d, dtype=np.int64)
+                continue
             vq = half_away(
                 w.astype(np.float64) / 10000000000 / nrm * 1000000
             )
@@ -664,7 +670,6 @@ def q_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PQ_SUBSPACES = 8  # 64 dims -> 8 sub-vectors of 8 dims
 _PQ_CODES = 16  # codewords per subspace (vec_id < 16 slices)
 
 

@@ -2,25 +2,30 @@
 
 Cross-engine float discipline (SURVEY.md §1.3, §7 hard-part 2):
 
-- ``dsum``/``davg`` accumulate doubles as DECIMAL(24,6) so the sum is
-  EXACT (int128 under the hood in both Spark and DuckDB) and therefore
-  bit-identical regardless of partition/merge order, then cast back to
-  DOUBLE. The matching oracle fragments are ``o_dsum``/``o_davg``.
-  This beats round(6) because it removes the nondeterminism instead of
-  papering over it — a 1e9-magnitude double sum reordered across 32
-  partitions can move by ~1e-6, exactly the rounding boundary.
-  Scale 6 matters: the test data quantizes prices/discount/tax to 2
-  decimals, so 3-factor products are EXACT 6-decimal values; a coarser
-  decimal cast would land on half-boundaries where Spark (HALF_UP) and
-  DuckDB (HALF_EVEN) disagree — measured: 0.0046 drift on TPC-H Q1's
-  sum_charge at scale 4. At scale 6 the cast is rounding-free.
+- ``dsum``/``davg`` round each double to micro-units half-away-from-
+  zero as a BIGINT, sum the longs (EXACT integer arithmetic in both
+  Spark and DuckDB, so bit-identical regardless of partition/merge
+  order), and unscale once to DOUBLE at the end. The matching oracle
+  fragments are ``o_dsum``/``o_davg``. This beats round(6) because it
+  removes the nondeterminism instead of papering over it — a
+  1e9-magnitude double sum reordered across 32 partitions can move by
+  ~1e-6, exactly the rounding boundary. The micro-unit scale matters:
+  the test data quantizes prices/discount/tax to 2 decimals, so
+  3-factor products are EXACT 6-decimal values and the per-row
+  rounding never lands on a half-boundary; a coarser scale would,
+  and there engines disagree on ties (measured with a scale-4
+  DECIMAL: 0.0046 drift on TPC-H Q1's sum_charge between Spark's
+  HALF_UP and DuckDB's HALF_EVEN).
+- Windowed running sums cast to ``DEC`` = DECIMAL(24,6) instead, which
+  is exact (int128) for the same reason.
 - For aggregates that are inherently float-path-dependent (stddev,
   corr, cosine), round to 6 on both sides (boundary-flip probability
   is negligible at those magnitudes).
 
-Scale note: DECIMAL sums are still map-side-combinable hash aggregates
-in Spark (partial_sum(decimal) merges exactly), so this costs nothing
-at 100 TB — the shuffle still carries one partial row per group.
+Scale note: BIGINT sums are map-side-combinable hash aggregates
+(partial_sum merges exactly), so this costs nothing at 100 TB — the
+shuffle still carries one partial row per group. The long accumulator
+bounds the domain (see ``dsum``).
 """
 
 from __future__ import annotations
@@ -36,7 +41,7 @@ DEC = "decimal(24,6)"
 # when the caller finally acts on the frame). Without a ledger those
 # blocks live for the whole session and accumulate across a
 # registry-wide sweep. Every operator-held persist goes through
-# tracked_persist(); harnesses (bench.py, tools/check_parity,
+# tracked_persist(); harnesses (perfbench, tools/check_parity,
 # __spark_entry__ consumers) call release_persists() after each
 # query's action. spark.catalog.clearCache() also works — this is the
 # targeted version that doesn't evict unrelated user caches.
@@ -164,8 +169,8 @@ def dsum(col: Column | str, alias: str) -> Column:
 
     Mechanism: per-row scale to micro-units and round half-away-from-
     zero, sum as BIGINT (exact, order-free, plain long arithmetic),
-    unscale once at the end. Identical values to the DECIMAL(24,6)
-    formulation on this data (the cast is rounding-free at scale 6,
+    unscale once at the end. Identical values to an exact DECIMAL(24,6)
+    accumulation on this data (the rounding is tie-free at scale 6,
     see module docstring).
 
     The half-away rounding is spelled ``trunc(v ± 0.5)`` rather than

@@ -1433,9 +1433,8 @@ def q_ppjoin_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     has a 31-token vocabulary (50 k docs, ~23 distinct tokens each),
     so even the RAREST tokens post ~35 k docs and the prefix
     self-join's exact candidate count — computed from the prefix
-    histogram as Σ n·(n−1)/2 in under 2 s by
-    tools/profile_ppjoin_sf1.py — is 4,054,323,271. That 4.05 B-pair
-    stream, not any stage of this plan, is the >25-min sf1 wall. A
+    histogram as Σ n·(n−1)/2 in under 2 s — is 4,054,323,271. That
+    4.05 B-pair stream, not any stage of this plan, is the >25-min sf1 wall. A
     posting-list cap was considered and REJECTED: dropping postings
     from a hot token silently drops true pairs, forfeiting the
     exactness that is this op's reason to exist next to L8. The
@@ -1445,11 +1444,11 @@ def q_ppjoin_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheap; on tiny-vocabulary/templated corpora PPJoin is the wrong
     tool and MinHash-LSH (L8) is the documented fallback. The
     natural-vocabulary half of that rule is MEASURED, not assumed:
-    tools/bench_ppjoin_wide_vocab.py runs this exact op on a 55 k-doc
-    corpus with a 50 k-type Zipf-ish vocabulary — candidate mass
-    7,488,933 (541× below the fixture), hottest posting 33 docs, and
-    the full exact join completes in 17.8 s recovering exactly the
-    5,000 planted Jaccard≥0.8 twins (SCALE.md round-7 table).
+    this exact op, run on a 55 k-doc corpus with a 50 k-type
+    Zipf-ish vocabulary — candidate mass 7,488,933 (541× below the
+    fixture), hottest posting 33 docs — completes the full exact join
+    in 17.8 s recovering exactly the 5,000 planted Jaccard≥0.8 twins
+    (SCALE.md round-7 table).
     """
     from .llm import _doc_tokens
 
@@ -1723,9 +1722,11 @@ def q_local_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     Under the default lz4 shuffle codec that run DIED on disk
     (java.io.IOException, 77 GB volume); under
     ``spark.io.compression.codec=zstd`` (level 3) the same family
-    completes with a measured 32.7 GB peak — use the session recipe
-    in tools/run_minhash_sf1.py for ANY consumer of
-    minhash_candidates at sf ≥ 1.
+    completes with a measured 32.7 GB peak — build the session with
+    ``spark.io.compression.codec=zstd``,
+    ``spark.io.compression.zstd.level=3`` and a ``spark.local.dir``
+    on a large volume for ANY consumer of minhash_candidates at
+    sf ≥ 1.
     """
     import pandas as pd
 
@@ -2263,8 +2264,8 @@ def q_minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumes ``minhash_candidates`` verbatim, so it inherits the
     ~100 GB lz4 shuffle appetite measured for that stream — a default
     session DIED on disk at sf1 (SPILL_OUT_OF_MEMORY / No space
-    left). Use the zstd session recipe in tools/run_minhash_sf1.py,
-    exactly like q_local_alignment (SCALE.md determinism ledger).
+    left). Use the zstd session recipe in q_local_alignment's
+    docstring (SCALE.md determinism ledger).
     """
     cand = minhash_candidates(spark, sf_dir)
     d = load(spark, sf_dir, "documents")

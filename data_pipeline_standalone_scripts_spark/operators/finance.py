@@ -234,11 +234,11 @@ _WIDTH_SEC = "(10 + (CAST(props ->> '$.k' AS BIGINT) % 50)) * 60"
 
 # Deployment lever (VERDICT r06 #5 / r11 #8, shipped r12): a user_id-
 # bucketed events layout turns this op's ONE mandatory exchange into a
-# scan property — measured −39% at sf10 (tools/bench_bucketed.py,
-# BASELINE.md round-6). Set this conf to the name of a catalog table
-# bucketed by user_id (bucketBy(N, "user_id") saveAsTable) and the op
-# reads it instead of the plain parquet fixture; the window then
-# consumes the bucket HashPartitioning and the plan is exchange-free
+# scan property — measured −39% at sf10 (BASELINE.md round-6). Set
+# this conf to the name of a catalog table bucketed by user_id
+# (bucketBy(N, "user_id") saveAsTable) and the op reads it instead of
+# the plain parquet fixture; the window then consumes the bucket
+# HashPartitioning and the plan is exchange-free
 # (pytest-gated: tests/test_round12_opt.py). Default empty: the driver
 # hands us plain parquet and bucket metadata lives in the session
 # catalog, so the registry number stays the honest scan + exchange.
@@ -341,7 +341,7 @@ def q_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Layout decision (VERDICT r06 #5): a user_id-bucketed events
     layout removes this op's ONE exchange and is a measured −39% at
-    sf10 (tools/bench_bucketed.py, BASELINE.md round-6). The registry
+    sf10 (BASELINE.md round-6). The registry
     row deliberately stays on the PLAIN parquet fixture: the driver
     hands us its own session over unbucketed parquet, and bucketed
     saveAsTable metadata does not survive a session restart

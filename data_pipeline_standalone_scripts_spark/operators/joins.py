@@ -30,16 +30,15 @@ from .common import dsum, o_dsum
 CAT = "joins"
 
 # Size-dispatched shuffled-hash-join hint for q3 (q_join_star3).
-# Measured with the counterbalanced ABBA harness (tools/ab_shj_star.py,
-# sf10, one session, arm order alternating per round): q3 SHJ 2.44 s
+# Measured with a counterbalanced ABBA harness (sf10, one session,
+# arm order alternating per round): q3 SHJ 2.44 s
 # vs SMJ 3.44 s median-of-8 — and the distribution is the finding:
 # the SMJ arm spikes past 4.2 s in half its runs (the 15 M-row orders
 # sort is GC-spiky) while SHJ holds 2.0-2.7 s. q5 measured a WASH
 # under the same harness (2.52 vs 2.42) and keeps default SMJ.
-# Methodology note, learned the hard way: the first A/B
-# (tools/bench_join_conf.py) ran variants in a fixed order per round
-# and systematically credited the last-run variant with the round's
-# warming — fixed-order A/Bs on this box are not citable.
+# Methodology note, learned the hard way: the first A/B ran variants
+# in a fixed order per round and systematically credited the last-run
+# variant with the round's warming — fixed-order A/Bs are not citable.
 # The build sides are structurally ~10x smaller than the probe
 # (filtered customer vs orders; cust⋈orders vs lineitem) at ANY scale
 # factor — the SHJ sweet spot: too big to broadcast, small enough to
@@ -160,11 +159,10 @@ def q_join_star3(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast regime (_SHJ_MIN_ORDERS_BYTES) both joins take a
     shuffled-hash hint with the structurally-smaller side as build
     (filtered customer ~1/50 of orders; the cust⋈orders stream ~15%
-    of lineitem) — same exchanges as SMJ, no sorts. Measured via the
-    counterbalanced ABBA harness (tools/ab_shj_star.py; the naive
-    fixed-order A/B in tools/bench_join_conf.py systematically favors
-    whichever variant runs last in each round — kept as a cautionary
-    artifact): sf10 same-session SHJ 2.44 s vs SMJ 3.44 s
+    of lineitem) — same exchanges as SMJ, no sorts. Measured via a
+    counterbalanced ABBA harness (a naive fixed-order A/B
+    systematically favors whichever variant runs last in each round):
+    sf10 same-session SHJ 2.44 s vs SMJ 3.44 s
     median-of-8, and the SMJ arm is the unstable one (4 of 8 runs
     spike past 4.2 s on the 15 M-row orders sort; SHJ spikes once).
     Below the threshold every side broadcasts and the hint stays off,
@@ -246,7 +244,7 @@ def q_join_star6(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
     ).join(F.broadcast(dims), F.col("l_suppkey") == F.col("s_suppkey"))
     # SHJ hints on the orders/customer sides were MEASURED A WASH here
-    # (tools/ab_shj_star.py ABBA, sf10 same-session: SHJ 2.52 s vs SMJ
+    # (ABBA, sf10 same-session: SHJ 2.52 s vs SMJ
     # 2.42 s median-of-8) — unlike q3, whose custkey sort is the spiky
     # stage. q5's cost is moving the ASIA lineitem stream through the
     # orderkey exchange, identical under either strategy, and sorting
@@ -254,7 +252,7 @@ def q_join_star6(spark: SparkSession, sf_dir: str) -> DataFrame:
     # speed, and sort-merge degrades more gracefully if a build side
     # ever outgrows memory at deployment scale.
     # Pre-aggregation lever MEASURED WORSE (round 8, VERDICT r07 #8,
-    # tools/bench_star6_preagg ABBA sf10, values equal): collapsing
+    # ABBA sf10, values equal): collapsing
     # ASIA lineitem to (l_orderkey, s_nationkey) grain before the join
     # chain runs 3.89 s vs 2.47 s shipped = 1.58x — the pre-agg's own
     # (orderkey, natkey) exchange plus the re-exchange to orderkey for

@@ -940,7 +940,7 @@ def q_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (tests/test_guards.py pins the null-text behavior). ABBA vs
         # the dict kernel (toPandas protocol, interleaved): sf0.1
         # 1.00→0.88 s, sf1 1.19→1.18 s, sf10 1.32→1.22 s — never
-        # loses (tools/bench_arrow_kernels.py).
+        # loses.
         import pyarrow as pa
         import pyarrow.compute as pc
 

@@ -197,7 +197,7 @@ def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     uniqueness — the distinct disappears from the plan along with the
     window sort. Value-pinned against the retained window formulation
     (tests/test_round13_opt.py) and the unchanged oracle. Measured
-    (ABBA, tools/bench_r13_ab.py): sf0.1 0.51→0.46 s, sf1 2.59→1.03 s
+    (ABBA, toPandas protocol): sf0.1 0.51→0.46 s, sf1 2.59→1.03 s
     toPandas; sf10 noop 12.7→2.6 s (row counts equal at 30,688,064).
     The single pre-explosion doc_id exchange (the parallelism crutch
     for single-row-group local scans) is unchanged and still gated.
@@ -534,8 +534,8 @@ def q_ngram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     three broadcast builds (big, uni, V) whose subtrees each contained
     the corpus explode — column pruning makes the repeated subtrees
     non-canonical, so without AQE's runtime stage reuse the corpus was
-    tokenized FOUR times per run (plans/r13/docs_lm_score_before.txt:
-    4 Generate nodes over 4 documents scans). This shape derives c1
+    tokenized FOUR times per run (the r12 physical plan had 4 Generate
+    nodes over 4 documents scans). This shape derives c1
     and V from the bigram-count table ITSELF via windows (vocab-
     bounded: partitionBy(w1) unbounded sums + one whole-frame sum —
     no self-join, no subtree duplication), precomputes each gram's
@@ -545,8 +545,8 @@ def q_ngram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly TWO corpus explodes by construction in every mode — and
     strictly less work even under AQE reuse. Value-pinned against the
     r12 three-broadcast formulation (tests/test_round13_opt.py) and
-    the unchanged oracle. Measured (ABBA, toPandas protocol,
-    tools/bench_r13_ab.py): sf0.1 1.02→0.93 s, sf1 1.11→0.96 s, sf10
+    the unchanged oracle. Measured (ABBA, toPandas protocol):
+    sf0.1 1.02→0.93 s, sf1 1.11→0.96 s, sf10
     4.40→4.35 s (wash inside noise — never loses a tier). At web-scale
     vocab the whole-frame V window becomes the same shuffle-agg the
     broadcast fallback already prescribes.
@@ -1478,7 +1478,6 @@ def q_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DOREMI_STEPS = 3
 DOREMI_ETA = 0.5  # multiplicative-weights learning rate (per nat of excess)
-_W_SCALE = 1_000_000  # weights live as exact micro-integers summing to 1e6
 
 
 def _doremi_loss_ctes() -> str:

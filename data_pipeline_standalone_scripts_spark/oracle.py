@@ -115,7 +115,7 @@ def _reject_unhashable_cols(engine: str, pdf: pd.DataFrame, issues: list[str]) -
     """The DRIVER's canonicalizer (pandas sort_values → factorize) crashes
     on list/dict cells ('unhashable type'). Our local replica used to
     tolerate them via tuple conversion, which masked two driver failures
-    in round 1 (CORRECTNESS_r01: q_agg_collect, q_centroid_per_label).
+    in round 1 (q_agg_collect, q_centroid_per_label).
     Reject them outright so local green implies driver green — queries
     must serialize arrays/structs to strings before the oracle boundary."""
     import numpy as np

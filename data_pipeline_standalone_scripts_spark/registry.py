@@ -14,7 +14,7 @@ Determinism contract (SURVEY.md §2 preamble): every T2 query breaks
 top-k ties on a unique key, wraps collect_list in array_sort, and
 rounds genuinely-floaty aggregates to 6 decimals on BOTH sides.
 Where a float aggregate can be made bit-exact instead (sum/avg via
-DECIMAL accumulation), we do that — see helpers in operators/common.py.
+exact micro-unit BIGINT accumulation), we do that — see helpers in operators/common.py.
 """
 
 from __future__ import annotations
@@ -58,25 +58,6 @@ def register(
         return fn
 
     return deco
-
-
-def reorder(priority: list[str]) -> None:
-    """Rebuild REGISTRY so ``priority`` names come first (in the given
-    order), everything else behind in existing insertion order.
-
-    Why this exists: the correctness driver hash-checks only the FIRST
-    50 registry entries per round (verified in round 1 — the checked
-    set was exactly ``islice(REGISTRY, 50)``), so insertion order
-    decides which operators ever receive the hard external signal.
-    We rotate never-yet-checked operators to the front each round
-    rather than leaving the grading surface to import-order accident.
-    Unknown names in ``priority`` are ignored (defensive: a renamed
-    query must not silently break loading)."""
-    front = {n: REGISTRY[n] for n in priority if n in REGISTRY}
-    back = {n: q for n, q in REGISTRY.items() if n not in front}
-    REGISTRY.clear()
-    REGISTRY.update(front)
-    REGISTRY.update(back)
 
 
 def queries() -> dict[str, QueryFn]:

@@ -4,7 +4,7 @@ The driver owns the SparkSession it passes into ``entry``/``queries()``;
 we therefore split configuration in two tiers:
 
 - build-time conf (master, memory, AQE) — only applied when *we* create
-  the session (tests, bench);
+  the session (tests, tools, perfbench);
 - runtime conf (session timezone, ANSI) — safe to (re)apply on any
   session, which ``ensure_runtime_conf`` does idempotently. Correctness
   of timestamp queries vs the UTC-naive DuckDB oracle depends on the
@@ -44,6 +44,7 @@ def _ship_package(spark: SparkSession) -> None:
     key = id(sc)
     if key in _PKG_SHIPPED:
         return
+    import atexit
     import tempfile
     import zipfile
 
@@ -52,6 +53,10 @@ def _ship_package(spark: SparkSession) -> None:
     zip_path = os.path.join(
         tempfile.gettempdir(), f"{pkg_name}-{os.getpid()}.zip"
     )
+    # executors fetch the zip lazily (local mode: on their first task),
+    # so it must outlive every session of this process — remove it only
+    # when the interpreter exits
+    atexit.register(_remove_quietly, zip_path)
     with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_STORED) as zf:
         for root, _dirs, files in os.walk(pkg_dir):
             if "__pycache__" in root:
@@ -64,6 +69,13 @@ def _ship_package(spark: SparkSession) -> None:
                 zf.write(full, arc)
     sc.addPyFile(zip_path)
     _PKG_SHIPPED.add(key)
+
+
+def _remove_quietly(path: str) -> None:
+    try:
+        os.remove(path)
+    except FileNotFoundError:
+        pass
 
 
 def ensure_runtime_conf(spark: SparkSession) -> SparkSession:
@@ -88,20 +100,16 @@ def ensure_runtime_conf(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def get_spark(
-    app_name: str = "dpss-spark",
-    cpus: str | int | None = None,
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
-    """Local-mode session for tests/bench. local[N] = one JVM, N task
-    threads; `spark.driver.memory` is the only memory knob that matters
-    in local mode."""
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "*")
-    shuffle = shuffle_partitions or int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))
+def get_spark(app_name: str = "dpss-spark") -> SparkSession:
+    """Local-mode session for tests and tools. local[N] = one JVM, N
+    task threads (N from ``SPARK_GRAFT_CPUS``, default all cores);
+    `spark.driver.memory` (``SPARK_DRIVER_MEMORY``) is the only memory
+    knob that matters in local mode."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle))
+        .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))

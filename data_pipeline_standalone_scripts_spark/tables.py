@@ -32,8 +32,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir.rstrip('/')}/{name}.parquet"
@@ -113,10 +111,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     _SCAN_CACHE[key] = df
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
 
 
 def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:

@@ -96,21 +96,6 @@ def test_bpe_coalesce_guard_branches(spark):
     assert base == forced and len(base) > 0
 
 
-# --- driver window invariants -------------------------------------------------
-
-
-def test_driver_window_pins_first_50():
-    """The correctness driver hash-checks exactly the first 50 registry
-    entries; DRIVER_PRIORITY must be 50 unique registered names and
-    must BE that prefix after load_all_operators()."""
-    from data_pipeline_standalone_scripts_spark import DRIVER_PRIORITY
-
-    assert len(DRIVER_PRIORITY) == 50
-    assert len(set(DRIVER_PRIORITY)) == 50
-    assert set(DRIVER_PRIORITY) <= set(REGISTRY)
-    assert list(REGISTRY)[:50] == DRIVER_PRIORITY
-
-
 # --- fits_encode hardening (ADVICE r09 #2) ----------------------------------
 
 

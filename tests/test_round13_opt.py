@@ -235,6 +235,21 @@ def test_power_iteration_empty_table_degrades(spark, tmp_path):
     assert list(out.columns) == ["pos", "loading"]
 
 
+def test_power_iteration_identical_vectors_zero_loadings(spark, tmp_path):
+    """Identical embeddings centre to a zero Gram matrix, so the power
+    step's norm is 0: loadings come out 0.0, never INT64_MIN from a
+    NaN cast."""
+    src = load(spark, "/root/testdata/sf0.001", "embeddings")
+    same_dir = str(tmp_path / "same_sf")
+    src.limit(20).withColumn(
+        "embedding", F.lit(src.first()["embedding"])
+    ).write.parquet(f"{same_dir}/embeddings.parquet")
+    out = REGISTRY["q_power_iteration_pc"].fn(spark, same_dir).toPandas()
+    assert len(out) == 64
+    assert np.isfinite(out["loading"]).all()
+    assert (out["loading"] == 0.0).all()
+
+
 def _winnow_r12(spark, sf_dir):
     """The r12 explode + window + distinct formulation of
     winnow_fingerprints, verbatim — the value pin for the mapInArrow

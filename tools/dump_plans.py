@@ -75,7 +75,8 @@ def main() -> None:
     from data_pipeline_standalone_scripts_spark.session import get_spark
 
     engine.load_all_operators()
-    spark = get_spark("plans", shuffle_partitions=8)
+    spark = get_spark("plans")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     out = [
