@@ -10,6 +10,7 @@ score accumulation becomes shuffle+agg (SURVEY.md §3.1).
 
 Public surface:
 - ``registry.REGISTRY`` — every query from SURVEY.md §2, with oracle SQL.
+- ``registry.run()`` — build, execute once and release one query.
 - ``session.get_spark()`` — tuned local SparkSession factory.
 - ``tables.load`` / ``tables.register_views`` — the ten test tables.
 """

@@ -129,7 +129,7 @@ def q_agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("q_agg_approx_distinct", oracle=None, category=CAT, check="T2w")
+@register("q_agg_approx_distinct", oracle=None, category=CAT)
 def q_agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3: HyperLogLog distinct users per event type (rsd=0.02).
 
@@ -437,7 +437,7 @@ def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("q_agg_approx_percentile", oracle=None, check="T2w", category=CAT)
+@register("q_agg_approx_percentile", oracle=None, category=CAT)
 def q_agg_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A14: approx_percentile (KLL/GK-style sketch) — the 100 TB twin
     of A10's exact percentiles. Exact `percentile` materializes and

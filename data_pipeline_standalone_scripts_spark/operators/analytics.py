@@ -27,15 +27,13 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import register
-from ..tables import load, table_path
-from .common import davg, dist_ntile, dist_row_number, h60, o_davg, o_h60, tracked_persist
+from ..tables import load
+from .common import davg, dist_ntile, dist_row_number, h60, o_davg, o_h60, table_bytes, tracked_persist
 
 CAT = "analytics"
 
@@ -2010,19 +2008,8 @@ def q_wau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q_wau_hll).
     """
     e = load(spark, sf_dir, "events")
-    try:
-        p = table_path(sf_dir, "events")
-        sz = (
-            sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _, fs in os.walk(p)
-                for f in fs
-            )
-            if os.path.isdir(p)
-            else os.path.getsize(p)
-        )
-    except OSError:
-        sz = _WAU_EXPLODE_MAX_BYTES  # unknown size: scale-safe sweep
+    # 0 = unknown size: take the scale-safe sweep
+    sz = table_bytes(sf_dir, "events") or _WAU_EXPLODE_MAX_BYTES
     small = sz < _WAU_EXPLODE_MAX_BYTES
     # NOT persisted: the grid recomputes per consumer, but at any SF
     # the distinct+window pipeline is cheaper to recompute than to
@@ -2232,7 +2219,7 @@ def q_attribution_position(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("q_wau_hll", oracle=None, check="T2w", category=CAT)
+@register("q_wau_hll", oracle=None, category=CAT)
 def q_wau_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AN26: approximate trailing-7-day actives via Datasketches HLL
     union — the documented 100 TB swap for AN24's exact explode-

@@ -40,11 +40,12 @@ DEC = "decimal(24,6)"
 # so the operator itself can never unpersist (the cache is consumed
 # when the caller finally acts on the frame). Without a ledger those
 # blocks live for the whole session and accumulate across a
-# registry-wide sweep. Every operator-held persist goes through
-# tracked_persist(); harnesses (perfbench, tools/check_parity,
-# __spark_entry__ consumers) call release_persists() after each
-# query's action. spark.catalog.clearCache() also works — this is the
-# targeted version that doesn't evict unrelated user caches.
+# registry-wide sweep. Every operator-held persist or cache goes
+# through tracked_persist(). The ledger is drained after each query's
+# action by registry.run (every in-repo runner: oracle, tools, tests)
+# and by perfbench's own loop. spark.catalog.clearCache() also works —
+# draining is the targeted version that doesn't evict unrelated user
+# caches.
 _LIVE_PERSISTS: list[DataFrame] = []
 
 
@@ -64,30 +65,6 @@ def release_persists() -> int:
         except Exception:  # noqa: BLE001 — session may already be gone
             pass
     return n
-
-
-def table_disk_bytes(sf_dir: str, table: str) -> int:
-    """On-disk parquet bytes of a table (0 = unknown/non-local) — the
-    zero-job size probe broadcast-vs-shuffle dispatches use. Raw
-    parquet bytes are a LOWER bound on in-memory row size (encoding +
-    compression), so thresholds derived from it must keep a wide
-    margin under the 8 GB broadcast cap."""
-    import os
-
-    from ..tables import table_path
-
-    path = table_path(sf_dir, table)
-    try:
-        if os.path.isdir(path):
-            return sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _, fs in os.walk(path)
-                for f in fs
-                if f.endswith(".parquet")
-            )
-        return os.path.getsize(path)
-    except OSError:
-        return 0
 
 
 def scan_splits_hint(spark, sf_dir: str, table: str) -> int:
@@ -160,7 +137,10 @@ def table_bytes(sf_dir: str, table: str) -> int:
     their scale-safe branch (the same contract as scan_splits_hint).
     Used by the size-conditional broadcast/coalesce guards (VERDICT
     r09 #5): prose fallbacks like "at scale this becomes two hash
-    joins" are only real if a branch actually switches on the size."""
+    joins" are only real if a branch actually switches on the size.
+    Raw parquet bytes are a LOWER bound on in-memory row size (encoding
+    + compression), so broadcast thresholds derived from them must keep
+    a wide margin under the 8 GB broadcast cap."""
     return sum(_parquet_sizes(sf_dir, table))
 
 
@@ -323,10 +303,13 @@ def dist_row_number(
     from pyspark.sql.window import Window  # local: keep module deps minimal
 
     # persist() is CORRECTNESS here, not caching: the pid column is
-    # spark_partition_id() evaluated at shuffle-read time, and AQE may
-    # coalesce the range exchange differently for the row branch vs
-    # the counts branch (different read partitioning -> inconsistent
-    # pids -> wrong offsets). Materializing once pins one assignment.
+    # spark_partition_id() of the range exchange. Without the persist
+    # each branch (rows, counts, offsets) plans its OWN exchange:
+    # column pruning gives them different children, so no exchange is
+    # reused, and each RangePartitioner samples its own bounds. The
+    # same row then gets different pids per branch -> wrong offsets
+    # (none of the exchanges sits under an AQE coalesced read). The
+    # persist makes the three branches read ONE materialization.
     ranged = tracked_persist(
         df.repartitionByRange(parts, *keys).withColumn(
             pid, F.spark_partition_id()
@@ -397,7 +380,8 @@ def dist_running(
     ]
     pid = "__dr_pid"
     # persist pins ONE pid assignment across the running/totals
-    # branches (see dist_row_number: AQE read-coalescing hazard)
+    # branches (see dist_row_number: without it each branch samples
+    # its own range bounds)
     ranged = tracked_persist(
         df.repartitionByRange(parts, *keys).withColumn(
             pid, F.spark_partition_id()

@@ -27,7 +27,7 @@ from .common import (
     dist_row_number,
     h60,
     o_h60,
-    table_disk_bytes,
+    table_bytes,
     tracked_persist,
 )
 from .llm import (
@@ -1347,12 +1347,12 @@ def q_pagerank_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
     pairs = q_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    edges = (
+    edges = tracked_persist(
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionAll(
             pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        ),
+        StorageLevel.MEMORY_AND_DISK,
     )
     docs = load(spark, sf_dir, "documents").select("doc_id")
     nn = docs.agg(F.count(F.lit(1)).alias("n"))
@@ -1692,7 +1692,7 @@ def smith_waterman_score(a: str, b: str) -> int:
     return best
 
 
-@register("q_local_alignment", oracle=None, check="T2w", category=CAT)
+@register("q_local_alignment", oracle=None, category=CAT)
 def q_local_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X43: Smith–Waterman local alignment over LSH candidate pairs —
     the fine-grained overlap verifier that runs AFTER MinHash/SimHash
@@ -2249,7 +2249,7 @@ def q_minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     banded candidates, exact verify via codegen array_intersect on
     hashed token arrays; never an all-pairs join. The verify join is
     broadcast ONLY while the documents table is < 512 MB on disk
-    (table_disk_bytes probe — arrays are ~8 B/distinct token, so this
+    (table_bytes probe — arrays are ~8 B/distinct token, so this
     keeps far under the 8 GB broadcast cap); above that the hint is
     dropped and AQE picks the strategy.
     Caveat (documented, shared with L8): banding targets Jaccard, so
@@ -2283,7 +2283,7 @@ def q_minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would hit Spark's 8 GB broadcast cap (or driver memory) long
     # before the documented sf>=1 shuffle caveat. Above the threshold
     # we drop the hint and let AQE pick the strategy at runtime.
-    _bcast_ok = table_disk_bytes(sf_dir, "documents") < 1 << 29  # 512 MB
+    _bcast_ok = table_bytes(sf_dir, "documents") < 1 << 29  # 512 MB
     _hint = F.broadcast if _bcast_ok else (lambda x: x)
     aa = arrs.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("ta"))
     bb = arrs.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("tb"))

@@ -25,7 +25,7 @@ from pyspark.sql.window import Window
 
 from ..registry import register
 from ..tables import load, register_views
-from .common import dsum, o_dsum
+from .common import dsum, o_dsum, table_bytes
 
 CAT = "joins"
 
@@ -50,24 +50,8 @@ _SHJ_MIN_ORDERS_BYTES = 64 * 1024 * 1024
 
 
 def _use_shj(sf_dir: str) -> bool:
-    import os
-
-    from ..tables import table_path
-
-    path = table_path(sf_dir, "orders")
-    try:
-        if os.path.isdir(path):
-            total = sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _, fs in os.walk(path)
-                for f in fs
-                if f.endswith(".parquet")
-            )
-        else:
-            total = os.path.getsize(path)
-    except OSError:
-        return False  # unknown layout -> scale-safe default (SMJ)
-    return total >= _SHJ_MIN_ORDERS_BYTES
+    # table_bytes is 0 for an unknown layout -> scale-safe default (SMJ)
+    return table_bytes(sf_dir, "orders") >= _SHJ_MIN_ORDERS_BYTES
 
 
 def _shj(df: DataFrame, enabled: bool) -> DataFrame:

@@ -536,7 +536,8 @@ def q_rle_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_linestatus").alias("ls"),
         )
         # persist pins one pid assignment across the lag/endpoint
-        # branches (common.dist_row_number AQE read-coalescing hazard)
+        # branches (common.dist_row_number: without it each branch
+        # samples its own range bounds)
         ranged = (
             tracked_persist(
                 proj.repartitionByRange(32, *keys).withColumn(

@@ -14,14 +14,13 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
 from ..tables import load
-from .common import dsum, o_dsum, ts_str
+from .common import dsum, o_dsum, tracked_persist, ts_str
 
 CAT = "scans"
 
@@ -585,17 +584,17 @@ def q_csv_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # The documented _corrupt_record gotcha: CSV column pruning parses
     # only referenced columns, so a query touching just the corrupt
-    # column sees a clean pruned parse and NULLs everywhere. cache()
+    # column sees a clean pruned parse and NULLs everywhere. Caching
     # is the idiom Spark's docs prescribe — the materialization parses
-    # the full schema once. Belt-and-braces, status also keys off the
+    # the full schema once (tracked_persist's default level is the one
+    # cache() uses). Belt-and-braces, status also keys off the
     # vandalized field being unparseable (NULL), which this
     # construction guarantees iff the row was corrupted.
-    back = (
+    back = tracked_persist(
         spark.read.schema(schema)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .csv(out_dir)
-        .cache()
     )
     status = F.when(
         F.col("_corrupt_record").isNotNull() | F.col("o_totalprice").isNull(),

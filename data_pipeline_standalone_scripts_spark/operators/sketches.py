@@ -397,7 +397,7 @@ _MG_K = 50  # Misra–Gries counter budget per partition
 _MG_TOP = 50  # emitted candidates (= k; see guarantee below)
 
 
-@register("q_heavy_hitters_mg", oracle=None, check="T2w", category=CAT)
+@register("q_heavy_hitters_mg", oracle=None, category=CAT)
 def q_heavy_hitters_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SK4: distributed Misra–Gries heavy hitters over the token
     stream — the deterministic frequent-items sketch that completes

@@ -201,7 +201,7 @@ def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     toPandas; sf10 noop 12.7→2.6 s (row counts equal at 30,688,064).
     The single pre-explosion doc_id exchange (the parallelism crutch
     for single-row-group local scans) is unchanged and still gated.
-    Non-ASCII text now raises in the kernel (ascii encode) instead of
+    Non-ASCII text raises a ValueError naming the doc_id instead of
     silently overflowing the 8-byte budget — the documented ASCII
     constraint made loud."""
     d = (
@@ -224,9 +224,14 @@ def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
             texts = batch.column(1).to_pylist()
             out_i, out_f = [], []
             for did, txt in zip(ids, texts):
-                b = np.frombuffer(txt.encode("ascii"), np.uint8).astype(
-                    np.int64
-                )
+                try:
+                    raw = txt.encode("ascii")
+                except UnicodeEncodeError as err:
+                    raise ValueError(
+                        f"winnowing needs ASCII text; doc_id {did} has a "
+                        f"non-ASCII character at offset {err.start}"
+                    ) from err
+                b = np.frombuffer(raw, np.uint8).astype(np.int64)
                 n = len(b) - K_GRAM + 1
                 gh = sw(b, K_GRAM) @ P
                 wm = np.empty(n, dtype=np.int64)

@@ -188,17 +188,10 @@ def compare_frames(name: str, spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame)
 
 def check_query(name: str, spark, sf_dir: str) -> ParityReport:
     """Run one registered query on both engines and compare."""
-    from .operators.common import release_persists
-    from .registry import REGISTRY
+    from .registry import REGISTRY, run
 
     q = REGISTRY[name]
-    try:
-        sdf = q.fn(spark, sf_dir)
-        spark_pdf = sdf.toPandas()
-    finally:
-        # drain the operator persist ledger (ADVICE r03 #1): cached
-        # blocks otherwise accumulate across a 297-op sweep
-        release_persists()
+    spark_pdf = run(name, spark, sf_dir)
     if q.oracle is None:
         ok = len(spark_pdf) >= 0
         return ParityReport(name, ok, len(spark_pdf), -1, [f"rows-only check ({q.check})"])

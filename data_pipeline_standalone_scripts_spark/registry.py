@@ -3,12 +3,14 @@
 Every operator from SURVEY.md §2 registers here with:
 - a Spark implementation ``fn(spark, sf_dir) -> DataFrame`` (lazy —
   the driver executes it), and
-- its DuckDB oracle SQL (or None for T2w/PT ops, which get the
+- its DuckDB oracle SQL (or None for T2w ops, which get the
   driver's weaker rows-only check).
 
 ``__spark_entry__.queries()`` / ``oracle_sql()`` are thin projections
 of this table. Column names MUST match between the two sides — the
-driver sorts columns by name before value-hashing.
+driver sorts columns by name before value-hashing. ``run()`` is the
+one way to execute a registered query: build, act once, release the
+operator-held persists.
 
 Determinism contract (SURVEY.md §2 preamble): every T2 query breaks
 top-k ties on a unique key, wraps collect_list in array_sort, and
@@ -21,8 +23,11 @@ from __future__ import annotations
 
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from operator import methodcaller
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .operators import common
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -31,28 +36,28 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class Query:
     name: str
     fn: QueryFn
-    oracle: str | None  # DuckDB SQL, None => rows-only check (T2w/PT)
+    oracle: str | None  # DuckDB SQL, None => rows-only check (T2w)
     category: str = ""
-    check: str = "T2"  # T2 | T2w | PT (SURVEY.md §2 legend)
     doc: str = field(default="", repr=False)
+
+    @property
+    def check(self) -> str:
+        """SURVEY.md §2 legend: T2 = oracle-checked, T2w = rows only."""
+        return "T2" if self.oracle is not None else "T2w"
 
 
 REGISTRY: dict[str, Query] = {}
 
 
 def register(
-    name: str, oracle: str | None = None, category: str = "", check: str = "T2"
+    name: str, oracle: str | None = None, category: str = ""
 ) -> Callable[[QueryFn], QueryFn]:
-    if oracle is None and check == "T2":
-        check = "T2w"
-
     def deco(fn: QueryFn) -> QueryFn:
         REGISTRY[name] = Query(
             name=name,
             fn=fn,
             oracle=oracle,
             category=category,
-            check=check,
             doc=(fn.__doc__ or "").strip(),
         )
         return fn
@@ -66,3 +71,22 @@ def queries() -> dict[str, QueryFn]:
 
 def oracles() -> dict[str, str]:
     return {name: q.oracle for name, q in REGISTRY.items() if q.oracle is not None}
+
+
+def run(
+    name: str,
+    spark: SparkSession,
+    sf_dir: str,
+    action: Callable[[DataFrame], object] = methodcaller("toPandas"),
+):
+    """Build query ``name``, apply ``action`` to it once and return
+    what it returned. The persists its operators took are released
+    afterwards, also when building or acting fails.
+
+    The default is a ``methodcaller``, not ``DataFrame.toPandas``: on
+    Spark 4 that attribute is the abstract parent's stub, which
+    returns None for a classic or Connect frame."""
+    try:
+        return action(REGISTRY[name].fn(spark, sf_dir))
+    finally:
+        common.release_persists()

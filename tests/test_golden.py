@@ -10,7 +10,7 @@ import os
 import pytest
 
 import data_pipeline_standalone_scripts_spark as engine
-from data_pipeline_standalone_scripts_spark.registry import REGISTRY
+from data_pipeline_standalone_scripts_spark.registry import REGISTRY, run
 
 GOLDEN = os.path.join(os.path.dirname(__file__), "golden", "hashes.json")
 
@@ -31,7 +31,7 @@ def test_golden_stable(name, spark):
         pytest.skip("query removed from registry; regenerate goldens")
     from tools.make_golden import canonical_hash
 
-    pdf = REGISTRY[name].fn(spark, _G["sf_dir"]).toPandas()
+    pdf = run(name, spark, _G["sf_dir"])
     want = _G["hashes"][name]
     assert len(pdf) == want["rows"], f"{name}: row count {len(pdf)} != {want['rows']}"
     assert canonical_hash(pdf) == want["sha256"], f"{name}: content drifted"

@@ -122,3 +122,18 @@ def test_kernel_ops_tolerate_null_text(spark, tmp_path):
     # in n_docs (exercised via the build-time stats collect)
     bm = REGISTRY["q_bm25_rank"].fn(spark, sf_dir).collect()
     assert all(r["bm25"] is not None for r in bm)
+
+
+def test_winnow_non_ascii_names_doc_id(spark, tmp_path):
+    """Winnowing packs 8 ASCII bytes into one long: a non-ASCII
+    document must fail with an error naming its doc_id, not a bare
+    UnicodeEncodeError from the Python worker."""
+    sf_dir = _write_documents(
+        spark, tmp_path,
+        [
+            (1, "plain ascii text here", "en", "web", 21),
+            (987654321, "un café au lait", "fr", "web", 15),
+        ],
+    )
+    with pytest.raises(Exception, match="987654321"):
+        REGISTRY["q_fingerprint_winnow"].fn(spark, sf_dir).collect()

@@ -13,12 +13,17 @@ engine.load_all_operators()
 
 @pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_query_parity(name, spark, sf_small):
+    spark.catalog.clearCache()  # the cache assertion measures this query only
     rep = check_query(name, spark, sf_small)
     assert rep.ok, str(rep)
+    # every operator-held cache went through the persist ledger
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
+        f"{name} left a cached plan behind"
+    )
 
 
 def test_registry_contract():
-    """Every T2 query has an oracle; T2w/PT never do."""
+    """Every T2 query has an oracle; T2w never do."""
     for name, q in REGISTRY.items():
         if q.check == "T2":
             assert q.oracle, f"{name} declared T2 without oracle SQL"

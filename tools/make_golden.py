@@ -34,19 +34,14 @@ def canonical_hash(pdf) -> str:
 
 def main() -> None:
     import data_pipeline_standalone_scripts_spark as engine
-    from data_pipeline_standalone_scripts_spark.registry import REGISTRY
+    from data_pipeline_standalone_scripts_spark.registry import REGISTRY, run
     from data_pipeline_standalone_scripts_spark.session import get_spark
-
-    from data_pipeline_standalone_scripts_spark.operators.common import (
-        release_persists,
-    )
 
     engine.load_all_operators()
     spark = get_spark("golden")
     hashes: dict[str, dict] = {}
     for name in sorted(REGISTRY):
-        pdf = REGISTRY[name].fn(spark, SF_DIR).toPandas()
-        release_persists()
+        pdf = run(name, spark, SF_DIR)
         hashes[name] = {"rows": len(pdf), "sha256": canonical_hash(pdf)}
         print(f"{name}: rows={len(pdf)}")
     os.makedirs(os.path.dirname(OUT), exist_ok=True)

@@ -22,8 +22,16 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import data_pipeline_standalone_scripts_spark as engine
-from data_pipeline_standalone_scripts_spark.registry import REGISTRY
+from data_pipeline_standalone_scripts_spark.registry import REGISTRY, run
 from data_pipeline_standalone_scripts_spark.session import get_spark
+
+# writer and reader options per file format; multiLine lets the reader
+# count quoted CSV fields that span lines as one row
+_FILE_OPTS = {
+    "parquet": {},
+    "json": {},
+    "csv": {"header": "true", "multiLine": "true"},
+}
 
 
 def main() -> int:
@@ -70,25 +78,32 @@ def main() -> int:
 
     spark = get_spark(f"run-{args.name}")
     t0 = time.time()
-    df = REGISTRY[args.name].fn(spark, args.sf)
     if args.explain:
-        df.explain("formatted")
+        run(args.name, spark, args.sf, lambda df: df.explain("formatted"))
         return 0
-    # cache before the action so the reported row count doesn't re-run
-    # the whole query (ADVICE r02: show/csv/json executed twice)
-    df = df.cache()
     if args.format == "show":
-        df.show(args.limit, truncate=False)
-        n = df.count()
-    elif args.format == "parquet":
-        df.write.mode("overwrite").parquet(args.out)
-        n = df.count()
-    elif args.format == "csv":
-        df.write.mode("overwrite").option("header", True).csv(args.out)
-        n = df.count()
+        pdf = run(args.name, spark, args.sf)
+        print(pdf.head(args.limit).to_string(index=False))
+        n = len(pdf)
     else:
-        df.write.mode("overwrite").json(args.out)
-        n = df.count()
+        # the query executes once, in the write; the row count comes
+        # from reading the written files back
+        opts = _FILE_OPTS[args.format]
+
+        def write(df):
+            df.write.mode("overwrite").format(args.format).options(**opts).save(
+                args.out
+            )
+            return df.schema
+
+        schema = run(args.name, spark, args.sf, write)
+        n = (
+            spark.read.schema(schema)
+            .format(args.format)
+            .options(**opts)
+            .load(args.out)
+            .count()
+        )
     print(f"[{args.name}] {n} rows in {time.time() - t0:.2f}s"
           + (f" -> {args.out}" if args.out else ""))
     return 0
