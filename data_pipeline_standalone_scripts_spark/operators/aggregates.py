@@ -64,7 +64,7 @@ def q_agg_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
 
     def sham(e: str) -> str:
-        # SQL twin of common._half_away_micros: double math throughout
+        # SQL twin of common.half_away_long(x, 1e6): double math throughout
         v = f"(({e}) * 1000000)"
         return (
             f"CAST({v} + (CASE WHEN {v} >= 0.0D THEN 0.5D ELSE -0.5D END)"

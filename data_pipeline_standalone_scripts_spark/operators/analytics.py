@@ -33,7 +33,7 @@ from pyspark.sql.window import Window
 
 from ..registry import register
 from ..tables import load
-from .common import davg, dist_ntile, dist_row_number, h60, o_davg, o_h60, table_bytes, tracked_persist
+from .common import davg, dist_ntile, dist_running, h60, half_away_long, o_davg, o_h60, table_bytes, tracked_persist
 
 CAT = "analytics"
 
@@ -1039,8 +1039,8 @@ def q_gini_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the fact collapses to per-customer grain first (one
     shuffle); the global rank over |customers| rows (10⁸–10⁹ at
-    100 TB) runs via `dist_row_number` (common.py) — range shuffle +
-    per-partition row_number + broadcast offsets, never a
+    100 TB) runs as a `dist_running` count (common.py) — range
+    shuffle + per-partition running count + broadcast offsets, never a
     single-partition sort. At extreme cardinality swap in the binned
     Gini (equi-depth histogram trapezoids from AN11's machinery),
     documented here as the approximation path.
@@ -1061,8 +1061,8 @@ def q_gini_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("cents")
         )
     )
-    ranked = dist_row_number(
-        rev, [("cents", "asc"), ("c", "asc")], "i", keep_total="n"
+    ranked = dist_running(
+        rev, [("cents", "asc"), ("c", "asc")], {"i": F.lit(1)}, keep_total="n"
     ).select("cents", "i", "n")
     return ranked.agg(
         F.max("n").alias("n_customers"),
@@ -1278,10 +1278,7 @@ def q_chi2_term_assoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     contrib = cell.join(F.broadcast(tot), "term").select(
         "term", "k", x.alias("x")
     )
-    micro = (
-        F.col("x") * 1_000_000
-        + F.when(F.col("x") >= 0, F.lit(0.5)).otherwise(F.lit(-0.5))
-    ).cast("long")
+    micro = half_away_long(F.col("x"), 1_000_000)
     return (
         contrib.groupBy("term")
         .agg(
@@ -1356,10 +1353,7 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("c_acctbal") > F.col("hi"), F.col("hi"))
         .otherwise(F.col("c_acctbal"))
     )
-    micro = lambda col: (
-        col * 1_000_000
-        + F.when(col >= 0, F.lit(0.5)).otherwise(F.lit(-0.5))
-    ).cast("long")
+    micro = lambda col: half_away_long(col, 1_000_000)
     return (
         j.select(
             "c_mktsegment",
@@ -1546,10 +1540,7 @@ def q_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
     pg = (F.col("g").cast("double") + 0.5) / (F.col("gt") + 0.5)
     pb = (F.col("bd").cast("double") + 0.5) / (F.col("bt") + 0.5)
     woe = F.log(pg / pb)
-    iv_n = (
-        (pg - pb) * woe * 1_000_000_000
-        + F.when((pg - pb) * woe >= 0, F.lit(0.5)).otherwise(F.lit(-0.5))
-    ).cast("long")
+    iv_n = half_away_long((pg - pb) * woe, 1_000_000_000)
     scored = w.select(
         "bucket",
         F.col("g").cast("long").alias("n_events"),
@@ -1885,10 +1876,7 @@ def q_feature_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-dedup; at extreme cardinality swap for approx_count_distinct.
     """
     e = load(spark, sf_dir, "events")
-    micro_v = (
-        F.col("value") * 1_000_000
-        + F.when(F.col("value") >= 0, F.lit(0.5)).otherwise(F.lit(-0.5))
-    ).cast("long")
+    micro_v = half_away_long(F.col("value"), 1_000_000)
     return (
         e.groupBy("user_id")
         .agg(

@@ -35,34 +35,21 @@ from pyspark.sql.window import Window
 
 from ..registry import register
 from ..tables import load
-from .common import h60, o_h60, topk_with_rank, tracked_persist
+from .common import (
+    h60,
+    half_away_long,
+    half_away_long_np,
+    o_h60,
+    quantize_micro,
+    topk_with_rank,
+    tracked_persist,
+)
 from .llm import _vec_double
 
 CAT = "clustering"
 
 _K = 8
 _PASSES = 2  # assignment passes: init-centroid pass + one Lloyd update
-
-
-def _half_away_long(q):
-    """trunc(q ± 0.5) as long — the codegen-friendly half-away round
-    shared with q_embed_quantize; matches DuckDB's trunc spelling."""
-    return (
-        q + F.when(q >= 0, F.lit(0.5)).otherwise(F.lit(-0.5))
-    ).cast("long")
-
-
-def _quantize_micro(arr):
-    """Element-wise round(x·1e6) half-away as long, inside codegen
-    (the shift-then-truncate spelling from q_embed_quantize — F.round
-    would route every element through BigDecimal)."""
-    def q(t):
-        v = t * 1_000_000
-        return (
-            v + F.when(v >= 0, F.lit(0.5)).otherwise(F.lit(-0.5))
-        ).cast("long")
-
-    return F.transform(arr, q)
 
 
 def _d2(a: str, b: str):
@@ -75,6 +62,93 @@ def _d2(a: str, b: str):
         F.lit(0).cast("long"),
         lambda s, t: s + t,
     )
+
+
+def _micro_rows(pdf: pd.DataFrame) -> np.ndarray:
+    """An Arrow batch's embeddings as an n×dim micro-long matrix — the
+    numpy twin of ``quantize_micro``."""
+    return half_away_long_np(np.stack(pdf["embedding"].to_numpy()), 1_000_000)
+
+
+def _nearest(X: np.ndarray, C: np.ndarray):
+    """Exact int64 assignment of each row of X to its nearest centroid
+    row of C: (argmin index, squared distance). ‖x−c‖² = x·x − 2x·C +
+    c·c, every intermediate ≤ ~2.6e14 ≪ 2⁶³; first-min = smallest cid
+    because C's rows are sorted by cid."""
+    D = (X * X).sum(1)[:, None] - 2 * (X @ C.T) + (C * C).sum(1)[None, :]
+    idx = D.argmin(1)
+    return idx, D[np.arange(len(idx)), idx]
+
+
+def _lloyd_pass(vec: DataFrame, cids: np.ndarray, C: np.ndarray) -> dict:
+    """One fused Lloyd pass over the persisted vectors: ONE Arrow-
+    batched numpy map emits per-batch (cluster, count, Σd², per-dim
+    sums) partials, merged exactly (Python ints) on the driver into
+    {cid: [n, sd2, sums]}."""
+    dim = C.shape[1]
+    sums = [f"s{j}" for j in range(dim)]
+
+    def part(batches):
+        for pdf in batches:
+            X = _micro_rows(pdf)
+            idx, d2 = _nearest(X, C)
+            rows = []
+            for i in range(len(cids)):
+                m = idx == i
+                if m.any():
+                    rows.append(
+                        [int(cids[i]), int(m.sum()), int(d2[m].sum())]
+                        + [int(v) for v in X[m].sum(0)]
+                    )
+            yield pd.DataFrame(rows, columns=["cid", "n", "sd2"] + sums)
+
+    schema = "cid int, n long, sd2 long, " + ", ".join(f"{c} long" for c in sums)
+    merged = {}
+    for r in vec.mapInPandas(part, schema).collect():
+        c = merged.setdefault(r["cid"], [0, 0, [0] * dim])
+        c[0] += r["n"]
+        c[1] += r["sd2"]
+        for j, col in enumerate(sums):
+            c[2][j] += r[col]
+    return merged
+
+
+def _lloyd(e: DataFrame, k_of, updates: int):
+    """The exact integer Lloyd kernel shared by q_kmeans_embed and
+    q_semantic_dedup (the MLlib layout: centroids live on the driver
+    between passes as k×dim longs).
+
+    Persists the RAW (vec_id, embedding) rows — quantization runs
+    inside the numpy kernels — and seeds with the k = ``k_of(vec)``
+    lowest vec_ids (a pushed-down tiny scan that does NOT force cache
+    materialization). Each of the ``updates`` rounds is one
+    :func:`_lloyd_pass` followed by the driver-side requantization:
+    the same IEEE-754 double divide + half-away trunc as the oracle's
+    ``CAST(SUM(v) AS DOUBLE)/COUNT(*)`` spelling, so centroid integers
+    are bit-identical across engines. Clusters that empty out drop.
+
+    Returns ``(vec, cids, C)``: the persisted frame, the sorted
+    centroid ids and their k×dim int64 matrix; ``C`` is None when the
+    table is empty.
+    """
+    vec = tracked_persist(e.select("vec_id", "embedding"))
+    seeds = (
+        e.filter(F.col("vec_id") < k_of(vec))
+        .select(F.col("vec_id").cast("int").alias("cid"), "embedding")
+        .collect()
+    )
+    if not seeds:
+        return vec, None, None
+    seeds.sort(key=lambda r: r["cid"])
+    cids = np.array([r["cid"] for r in seeds], dtype=np.int64)
+    C = half_away_long_np([r["embedding"] for r in seeds], 1_000_000)
+    for _ in range(updates):
+        stats = _lloyd_pass(vec, cids, C)
+        cids = np.array(sorted(stats), dtype=np.int64)
+        S = np.array([stats[c][2] for c in cids], dtype=np.float64)
+        n = np.array([stats[c][0] for c in cids], dtype=np.float64)
+        C = half_away_long_np(S / n[:, None])
+    return vec, cids, C
 
 
 @register(
@@ -148,9 +222,10 @@ def q_kmeans_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (counts, per-dimension sums, Σd²) — no broadcast exchange, no
     k-way row duplication, no per-vector argmin shuffle, no
     64-column SQL aggregation (measured 0.67 s alone). 3 jobs total:
-    cache+init-collect, pass-1 stats, pass-2 stats. All arithmetic is
-    exact int64 (‖x−c‖² = x·x − 2x·C + c·c, every intermediate
-    ≤ ~2.6e14 ≪ 2⁶³); the driver-side re-quantization repeats the
+    init-collect, pass-1 stats (materializes the cache), pass-2
+    stats — the shared :func:`_lloyd` kernel runs the seeding, pass 1
+    and the update. All arithmetic is exact int64 (see
+    :func:`_nearest`); the driver-side re-quantization repeats the
     identical IEEE-754 double divide + half-away trunc as the
     oracle's SQL, and the final round(6) is the same half-up the SQL
     round applies — so every value hash-matches DuckDB. Measured:
@@ -161,27 +236,10 @@ def q_kmeans_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import math
 
-    def q_micro(v: np.ndarray) -> np.ndarray:
-        # identical IEEE-754 ops to _quantize_micro's codegen spelling
-        q = v.astype(np.float64) * 1e6
-        return np.where(q >= 0, np.trunc(q + 0.5), np.trunc(q - 0.5)).astype(
-            np.int64
-        )
-
-    e = load(spark, sf_dir, "embeddings")
-    # cache RAW rows (no JVM-side transform) — quantization runs inside
-    # the numpy kernel; the init collect is a pushed-down tiny scan that
-    # does NOT force cache materialization
-    vec = tracked_persist(e.select("vec_id", "embedding"))
-    crows = (
-        e.filter(F.col("vec_id") < _K)
-        .select(F.col("vec_id").cast("int").alias("cid"), "embedding")
-        .collect()
+    vec, cids, C = _lloyd(
+        load(spark, sf_dir, "embeddings"), lambda vec: _K, _PASSES - 1
     )
-    cents = sorted(
-        (r["cid"], list(q_micro(np.array(r["embedding"])))) for r in crows
-    )
-    if not cents:
+    if C is None:
         # empty embeddings table: degrade to the empty result frame
         # (ADVICE r03 #4 — other ops degrade rather than IndexError)
         return spark.createDataFrame(
@@ -189,62 +247,7 @@ def q_kmeans_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cluster_id bigint, n_members bigint, "
             "inertia_micro2 bigint, rms_dist double",
         )
-    dim = len(cents[0][1])
-    stats_schema = (
-        "cid int, n long, sd2 long, "
-        + ", ".join(f"s{j} long" for j in range(dim))
-    )
-
-    def pass_stats(cents):
-        """One fused Lloyd pass: per-batch (cluster, count, Σd²,
-        per-dim sums) partials via numpy; caller merges exactly."""
-        C = np.array([cq for _, cq in cents], dtype=np.int64)
-        cids = np.array([cid for cid, _ in cents], dtype=np.int64)
-        C2 = (C * C).sum(1)
-
-        def part(batches):
-            for pdf in batches:
-                X = q_micro(np.stack(pdf["embedding"].to_numpy()))
-                D = (X * X).sum(1)[:, None] - 2 * (X @ C.T) + C2[None, :]
-                idx = D.argmin(1)  # first-min = smallest cid (C sorted)
-                d2 = D[np.arange(len(idx)), idx]
-                rows = []
-                for i in range(len(cids)):
-                    m = idx == i
-                    if not m.any():
-                        continue
-                    rows.append(
-                        [int(cids[i]), int(m.sum()), int(d2[m].sum())]
-                        + [int(v) for v in X[m].sum(0)]
-                    )
-                yield pd.DataFrame(
-                    rows,
-                    columns=["cid", "n", "sd2"]
-                    + [f"s{j}" for j in range(dim)],
-                )
-
-        merged = {}
-        for r in vec.mapInPandas(part, stats_schema).collect():
-            c = merged.setdefault(
-                r["cid"], [0, 0, [0] * dim]
-            )
-            c[0] += r["n"]
-            c[1] += r["sd2"]
-            for j in range(dim):
-                c[2][j] += r[f"s{j}"]
-        return merged
-
-    def trunc_half_away(q: float) -> int:
-        return int(q + 0.5) if q >= 0 else int(q - 0.5)
-
-    stats = pass_stats(cents)
-    for _ in range(_PASSES - 1):
-        cents = sorted(
-            (cid, [trunc_half_away(s[j] / n) for j in range(dim)])
-            for cid, (n, _sd2, s) in stats.items()
-        )
-        stats = pass_stats(cents)
-
+    stats = _lloyd_pass(vec, cids, C)
     vec.unpersist(blocking=False)  # fully consumed by the eager passes
     rows = [
         (
@@ -387,7 +390,7 @@ def q_power_iteration_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     emb = load(spark, sf_dir, "embeddings")
-    vec = emb.select(_quantize_micro(_vec_double()).alias("x"))
+    vec = emb.select(quantize_micro(_vec_double()).alias("x"))
 
     # One vectorized pass builds the UNcentered second moment S=Σvvᵀ
     # AND the per-dimension sums / row count (the tagged j=0 / i=j=0
@@ -441,26 +444,19 @@ def q_power_iteration_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
             g_rows["p"].to_numpy()
         )
 
-        def half_away(q: np.ndarray) -> np.ndarray:
-            # identical IEEE-754 ops to _half_away_long's codegen
-            # spelling: add ±0.5 on the unrounded double, truncate
-            return np.where(
-                q >= 0, np.trunc(q + 0.5), np.trunc(q - 0.5)
-            ).astype(np.int64)
-
-        mu = half_away(sv.astype(np.float64) / n)
+        mu = half_away_long_np(sv.astype(np.float64) / n)
         G = (
             S
             - mu[None, :] * sv[:, None]
             - mu[:, None] * sv[None, :]
             + n * mu[:, None] * mu[None, :]
         )
-        gu = half_away(G.astype(np.float64) / 100000)
+        gu = half_away_long_np(G.astype(np.float64) / 100000)
         vq = np.zeros(d, dtype=np.int64)
         vq[0] = 1000000  # v0 = e₁ in micro-units
         for _ in range(2):
             w = gu @ vq  # exact int64 matvec (overflow bounds above)
-            u = half_away(w.astype(np.float64) / 10000000000)
+            u = half_away_long_np(w.astype(np.float64) / 10000000000)
             nrm = np.sqrt(float((u * u).sum()))
             if nrm == 0:
                 # degenerate corpus (e.g. identical embeddings) has no
@@ -468,7 +464,7 @@ def q_power_iteration_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # than cast 0/0 = NaN to int64 (INT64_MIN)
                 vq = np.zeros(d, dtype=np.int64)
                 continue
-            vq = half_away(
+            vq = half_away_long_np(
                 w.astype(np.float64) / 10000000000 / nrm * 1000000
             )
         yield pd.DataFrame(
@@ -547,7 +543,7 @@ def q_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "vec_id",
         "i",
-        _half_away_long(F.col("v").cast("double") * 1_000_000).alias("ev"),
+        half_away_long(F.col("v").cast("double"), 1_000_000).alias("ev"),
     )
     gi = spark.range(64).select(F.col("id").cast("int").alias("i"))
     gj = spark.range(_RP_OUT).select(F.col("id").cast("int").alias("j"))
@@ -727,7 +723,7 @@ def q_product_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load(spark, sf_dir, "embeddings")
     ev = e.select(
-        "vec_id", F.posexplode(_quantize_micro(_vec_double())).alias("pos", "v")
+        "vec_id", F.posexplode(quantize_micro(_vec_double())).alias("pos", "v")
     )
     cb = ev.filter(F.col("vec_id") < _PQ_CODES).select(
         F.col("vec_id").alias("code"),
@@ -829,7 +825,7 @@ def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load(spark, sf_dir, "embeddings")
     ev = e.select(
-        "vec_id", F.posexplode(_quantize_micro(_vec_double())).alias("pos", "v")
+        "vec_id", F.posexplode(quantize_micro(_vec_double())).alias("pos", "v")
     )
     cb = ev.filter(F.col("vec_id") < _PQ_CODES).select(
         F.col("vec_id").alias("code"),
@@ -992,95 +988,26 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the same plan runs with k raised until n/k fits a
     partition.
     """
-
-    def q_micro(v: np.ndarray) -> np.ndarray:
-        q = v.astype(np.float64) * 1e6
-        return np.where(q >= 0, np.trunc(q + 0.5), np.trunc(q - 0.5)).astype(
-            np.int64
-        )
-
-    e = load(spark, sf_dir, "embeddings")
     import math
 
-    vec = tracked_persist(e.select("vec_id", "embedding"))
-    n_corpus = vec.count()  # materializes the cache; k scales with n
-    k = max(_K, math.ceil(n_corpus / SEM_TARGET))
-    crows = (
-        e.filter(F.col("vec_id") < k)
-        .select(F.col("vec_id").cast("int").alias("cid"), "embedding")
-        .collect()
+    e = load(spark, sf_dir, "embeddings")
+    # k scales with the corpus; the count materializes the cache
+    vec, cids, C = _lloyd(
+        e, lambda vec: max(_K, math.ceil(vec.count() / SEM_TARGET)), _PASSES - 1
     )
-    cents = sorted(
-        (r["cid"], list(q_micro(np.array(r["embedding"])))) for r in crows
-    )
-    if not cents:
+    if C is None:
         return spark.createDataFrame(
             [],
             "cluster_id long, vec_id long, max_cos double, "
             "redundancy_rank long",
         )
-    dim = len(cents[0][1])
-
-    def sums_pass(cents):
-        """KM1's fused stats pass, reduced to (n, per-dim sums) — the
-        centroid update needs no d2 here."""
-        C = np.array([cq for _, cq in cents], dtype=np.int64)
-        cids = np.array([cid for cid, _ in cents], dtype=np.int64)
-        C2 = (C * C).sum(1)
-        schema = "cid int, n long, " + ", ".join(
-            f"s{j} long" for j in range(dim)
-        )
-
-        def part(batches):
-            for pdf in batches:
-                X = q_micro(np.stack(pdf["embedding"].to_numpy()))
-                D = (X * X).sum(1)[:, None] - 2 * (X @ C.T) + C2[None, :]
-                idx = D.argmin(1)
-                rows = []
-                for i in range(len(cids)):
-                    m = idx == i
-                    if not m.any():
-                        continue
-                    rows.append(
-                        [int(cids[i]), int(m.sum())]
-                        + [int(v) for v in X[m].sum(0)]
-                    )
-                yield pd.DataFrame(
-                    rows, columns=["cid", "n"] + [f"s{j}" for j in range(dim)]
-                )
-
-        merged = {}
-        for r in vec.mapInPandas(part, schema).collect():
-            c = merged.setdefault(r["cid"], [0, [0] * dim])
-            c[0] += r["n"]
-            for j in range(dim):
-                c[1][j] += r[f"s{j}"]
-        return merged
-
-    def trunc_half_away(q: float) -> int:
-        return int(q + 0.5) if q >= 0 else int(q - 0.5)
-
-    for _ in range(_PASSES - 1):
-        stats = sums_pass(cents)
-        cents = sorted(
-            (cid, [trunc_half_away(s[j] / n) for j in range(dim)])
-            for cid, (n, s) in stats.items()
-        )
 
     # final assignment pass, emitting (vec_id, cid)
-    C = np.array([cq for _, cq in cents], dtype=np.int64)
-    cids = np.array([cid for cid, _ in cents], dtype=np.int64)
-    C2 = (C * C).sum(1)
-
     def assign(batches):
         for pdf in batches:
-            X = q_micro(np.stack(pdf["embedding"].to_numpy()))
-            D = (X * X).sum(1)[:, None] - 2 * (X @ C.T) + C2[None, :]
+            idx, _ = _nearest(_micro_rows(pdf), C)
             yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(),
-                    "cid": cids[D.argmin(1)],
-                }
+                {"vec_id": pdf["vec_id"].to_numpy(), "cid": cids[idx]}
             )
 
     asg = vec.mapInPandas(assign, "vec_id long, cid long")
@@ -1097,9 +1024,9 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dims): each D[i,j] sees the identical multiply-add sequence as
     # the JVM F.aggregate fold, so cosines are bit-identical to the
     # SQL spelling; rounding is sign-aware HALF_UP away from zero
-    # (floor(x·1e6+0.5) for x≥0, ceil(x·1e6−0.5) for x<0), the exact
-    # semantics of both F.round and DuckDB ROUND — a plain
-    # floor(x+0.5) would diverge on negative half-microticks.
+    # (common.half_away_long_np at scale 1e6), the exact semantics of
+    # both F.round and DuckDB ROUND — a plain floor(x+0.5) would
+    # diverge on negative half-microticks.
     # Parallelism is still k tasks, but each
     # is C-speed numpy (~0.5 s at n=2500) instead of minutes of
     # interpreted folds; memory is n²·8 bytes per task (50 MB at
@@ -1121,10 +1048,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # HALF_UP away from zero, matching Spark F.round / DuckDB ROUND
         # on NEGATIVE cosines too: floor(x+0.5) alone rounds -0.0000005
         # toward +inf while both engines round it away from zero.
-        C = (
-            np.where(C >= 0, np.floor(C * 1e6 + 0.5), np.ceil(C * 1e6 - 0.5))
-            / 1e6
-        )
+        C = half_away_long_np(C, 1_000_000) / 1e6
         np.fill_diagonal(C, -np.inf)
         return pd.DataFrame(
             {

@@ -26,10 +26,26 @@ Scale note: BIGINT sums are map-side-combinable hash aggregates
 (partial_sum merges exactly), so this costs nothing at 100 TB — the
 shuffle still carries one partial row per group. The long accumulator
 bounds the domain (see ``dsum``).
+
+Each part of the contract has ONE home; operators call these instead
+of re-spelling them:
+
+- rounding: ``half_away_long`` (Column) and its numpy twin
+  ``half_away_long_np`` — round(x·scale) half-away-from-zero to a
+  long with identical IEEE-754 ops, so a driver- or worker-side numpy
+  kernel and a JVM expression produce the same integers;
+  ``quantize_micro`` applies it element-wise to an array column.
+- global rank: ``_range_pinned`` — the range shuffle plus the persist
+  that pins one partition id per row. ``dist_running`` builds on it
+  (``dist_row_number`` and ``dist_ntile`` on that), and so does
+  ``maintenance.q_rle_advisor``.
+- iterative k-means: ``clustering._lloyd``, the exact integer Lloyd
+  kernel behind ``q_kmeans_embed`` and ``q_semantic_dedup``.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -167,19 +183,37 @@ def dsum(col: Column | str, alias: str) -> Column:
     loud error either way, never silent wrap).
     """
     c = F.col(col) if isinstance(col, str) else col
-    return (F.sum(_half_away_micros(c)) / 1_000_000.0).alias(alias)
+    return (F.sum(half_away_long(c, 1_000_000)) / 1_000_000.0).alias(alias)
 
 
-def _half_away_micros(c: Column) -> Column:
-    """round(c·1e6) half-away-from-zero as a codegen-friendly long."""
-    v = c * 1_000_000
+def half_away_long(c: Column, scale=1) -> Column:
+    """round(c·scale) half-away-from-zero as a codegen-friendly long:
+    ``trunc(v ± 0.5)`` on the scaled double ``v`` (see ``dsum`` for why
+    not F.round). ``scale=1`` rounds ``c`` as given. The numpy twin is
+    ``half_away_long_np``; the DuckDB side spells the same function
+    ``round()`` or ``trunc(v ± 0.5)``."""
+    v = c * scale if scale != 1 else c
     return (v + F.when(v >= 0, F.lit(0.5)).otherwise(F.lit(-0.5))).cast("long")
+
+
+def half_away_long_np(x, scale=1) -> np.ndarray:
+    """numpy twin of ``half_away_long``: the same IEEE-754 ops (double
+    multiply, add ±0.5 chosen on the scaled sign, truncate), so both
+    give bit-identical int64s on finite inputs inside the long range."""
+    v = np.asarray(x, dtype=np.float64) * scale
+    return np.trunc(v + np.where(v >= 0, 0.5, -0.5)).astype(np.int64)
+
+
+def quantize_micro(arr: Column) -> Column:
+    """Element-wise ``half_away_long(x, 1e6)`` over an array column,
+    inside codegen."""
+    return F.transform(arr, lambda t: half_away_long(t, 1_000_000))
 
 
 def davg(col: Column | str, alias: str) -> Column:
     """Exact-numerator average: scaled-long sum / count, as double."""
     c = F.col(col) if isinstance(col, str) else col
-    return (F.sum(_half_away_micros(c)) / 1_000_000.0 / F.count(c)).alias(alias)
+    return (F.sum(half_away_long(c, 1_000_000)) / 1_000_000.0 / F.count(c)).alias(alias)
 
 
 def o_dsum(expr: str, alias: str) -> str:
@@ -247,26 +281,22 @@ def dist_ntile(
     frame is 10⁸–10⁹ rows on ONE task at 100 TB).
 
     Mechanism (classic distributed rank):
-      1. ``repartitionByRange(parts, keys)`` — Spark's sampled range
-         shuffle; partition *i* holds keys strictly below partition
-         *i+1* in the requested order, so global rank = per-partition
-         rank + offset.
-      2. per-partition ``row_number`` via a window PARTITIONED by the
-         materialized partition id — every task sorts ~|df|/parts rows.
-      3. offsets = prefix sum of per-partition counts, computed by a
-         broadcast theta-join over the ≤``parts``-row counts table (no
-         WindowExec anywhere in this helper's plan).
-      4. NTILE arithmetic on the global rank with broadcast total
+      1. the global row number is a :func:`dist_running` count — range
+         shuffle, per-partition running count, broadcast prefix-sum
+         offsets — carrying the total row count alongside;
+      2. NTILE arithmetic on the global rank with broadcast total
          count: the first ``n_total mod n`` buckets take one extra row,
          exactly Spark/DuckDB NTILE semantics.
 
     ``order_by`` must define a TOTAL order (add a unique-key tie-break)
-    or per-partition row_number becomes nondeterministic. Requires
+    or the per-partition count becomes nondeterministic. Requires
     every ``order_by`` entry as a plain column name + direction via
     ``(col, "asc"|"desc")`` tuples so the same keys drive the range
     shuffle and the window sort.
     """
-    ranked = dist_row_number(df, order_by, out, parts=parts, keep_total="__n")
+    ranked = dist_running(
+        df, order_by, {out: F.lit(1)}, parts=parts, keep_total="__n"
+    )
     rank = F.col(out)
     base = (F.col("__n") / n).cast("long")  # floor: __n, n ≥ 0
     rem = F.col("__n") % n
@@ -282,62 +312,31 @@ def dist_ntile(
     return ranked.withColumn(out, bucket).drop("__n")
 
 
-def dist_row_number(
-    df,
-    order_by,
-    out: str,
-    parts: int = 32,
-    keep_total: str | None = None,
-):
+def dist_row_number(df, order_by, out: str, parts: int = 32):
     """Exact global ``row_number() OVER (ORDER BY …)`` without a
-    single-partition sort — steps 1–3 of :func:`dist_ntile`'s
-    mechanism (range shuffle → per-partition row_number → broadcast
-    prefix-sum offsets). ``order_by`` is ``(col, "asc"|"desc")``
-    tuples forming a TOTAL order. With ``keep_total`` set, the result
-    carries the global row count under that column (broadcast 1-row
-    cross join) for rank-arithmetic consumers like NTILE."""
-    keys = [
-        F.col(c).desc() if d == "desc" else F.col(c).asc() for c, d in order_by
-    ]
-    pid, rn = f"__{out}_pid", f"__{out}_rn"
-    from pyspark.sql.window import Window  # local: keep module deps minimal
+    single-partition sort: a :func:`dist_running` count of the constant
+    1 (BIGINT). ``order_by`` is ``(col, "asc"|"desc")`` tuples forming
+    a TOTAL order."""
+    return dist_running(df, order_by, {out: F.lit(1)}, parts=parts)
 
+
+def _range_pinned(df, keys, parts: int, pid: str):
+    """Range-shuffle ``df`` on ``keys`` into ``parts`` partitions and
+    tag each row with its partition id under ``pid`` — the ONE global-
+    rank primitive: partition *i* holds keys strictly below partition
+    *i+1*, so a per-partition aggregate plus the prefix of the earlier
+    partitions' totals is the global one."""
     # persist() is CORRECTNESS here, not caching: the pid column is
     # spark_partition_id() of the range exchange. Without the persist
-    # each branch (rows, counts, offsets) plans its OWN exchange:
-    # column pruning gives them different children, so no exchange is
-    # reused, and each RangePartitioner samples its own bounds. The
-    # same row then gets different pids per branch -> wrong offsets
-    # (none of the exchanges sits under an AQE coalesced read). The
-    # persist makes the three branches read ONE materialization.
-    ranged = tracked_persist(
-        df.repartitionByRange(parts, *keys).withColumn(
-            pid, F.spark_partition_id()
-        )
+    # each branch a caller derives (rows, counts, offsets) plans its
+    # OWN exchange: column pruning gives them different children, so
+    # no exchange is reused, and each RangePartitioner samples its own
+    # bounds. The same row then gets different pids per branch -> wrong
+    # offsets (none of the exchanges sits under an AQE coalesced read).
+    # The persist makes every branch read ONE materialization.
+    return tracked_persist(
+        df.repartitionByRange(parts, *keys).withColumn(pid, F.spark_partition_id())
     )
-    local = ranged.withColumn(
-        rn, F.row_number().over(Window.partitionBy(pid).orderBy(*keys))
-    )
-    counts = ranged.groupBy(pid).agg(F.count(F.lit(1)).alias("__cnt"))
-    a, b = counts.alias("a"), counts.alias("b")
-    offsets = (
-        a.join(
-            F.broadcast(b),
-            F.col(f"b.{pid}") < F.col(f"a.{pid}"),
-            "left",
-        )
-        .groupBy(F.col(f"a.{pid}").alias(pid))
-        .agg(F.coalesce(F.sum("b.__cnt"), F.lit(0)).alias("__off"))
-    )
-    res = (
-        local.join(F.broadcast(offsets), pid)
-        .withColumn(out, F.col(rn) + F.col("__off"))
-        .drop(pid, rn, "__off")
-    )
-    if keep_total:
-        total = counts.agg(F.sum("__cnt").alias(keep_total))
-        res = res.crossJoin(F.broadcast(total))
-    return res
 
 
 def dist_running(
@@ -347,22 +346,26 @@ def dist_running(
     parts: int = 32,
     inclusive: bool = True,
     maxs=None,
+    keep_total: str | None = None,
 ):
     """Distributed running SUMs (and running MAXes via ``maxs``) over
     a TOTAL order — the scale-safe replacement for ``SUM(x)/MAX(x)
     OVER (ORDER BY … ROWS UNBOUNDED PRECEDING)`` with no partitioning
     (ECDF walks, Lorenz curves, rank-sum statistics, watermark
-    replays, skyline strict-prefix maxima), same mechanism as
-    :func:`dist_row_number`: range shuffle → per-partition running
-    agg → broadcast per-partition totals combined as offsets
-    (sums add; maxes take ``greatest``).
+    replays, skyline strict-prefix maxima, global row numbers):
+    :func:`_range_pinned` range shuffle → per-partition running agg →
+    broadcast per-partition totals combined as offsets (sums add;
+    maxes take ``greatest``; no WindowExec over more than one
+    partition's rows anywhere in the plan).
 
-    ``sums``/``maxs`` map output column name → input column name;
-    ``inclusive=False`` gives the exclusive frame (… AND -1): sums
-    coalesce to 0 on the first row, maxes stay NULL (SQL running-max
-    semantics over an empty frame). ``order_by`` is
+    ``sums``/``maxs`` map output column name → input column (name or
+    Column); ``inclusive=False`` gives the exclusive frame (… AND -1):
+    sums coalesce to 0 on the first row, maxes stay NULL (SQL
+    running-max semantics over an empty frame). ``order_by`` is
     ``(col, "asc"|"desc")`` tuples and must be a total order (unique
-    keys) for determinism.
+    keys) for determinism. With ``keep_total`` set, the result carries
+    the global row count under that column (broadcast 1-row cross
+    join) for rank-arithmetic consumers like NTILE.
 
     NULL contract (ADVICE r03 #2): running SUMs are COALESCED TO 0 —
     an all-NULL prefix yields 0 where SQL window ``SUM`` yields NULL.
@@ -379,14 +382,7 @@ def dist_running(
         F.col(c).desc() if d == "desc" else F.col(c).asc() for c, d in order_by
     ]
     pid = "__dr_pid"
-    # persist pins ONE pid assignment across the running/totals
-    # branches (see dist_row_number: without it each branch samples
-    # its own range bounds)
-    ranged = tracked_persist(
-        df.repartitionByRange(parts, *keys).withColumn(
-            pid, F.spark_partition_id()
-        )
-    )
+    ranged = _range_pinned(df, keys, parts, pid)
     upper = 0 if inclusive else -1
     w_loc = (
         Window.partitionBy(pid)
@@ -404,6 +400,7 @@ def dist_running(
     totals = ranged.groupBy(pid).agg(
         *[F.sum(c).alias(f"__t_{o}") for o, c in sums.items()],
         *[F.max(c).alias(f"__t_{o}") for o, c in maxs.items()],
+        *([F.count(F.lit(1)).alias("__cnt")] if keep_total else []),
     )
     a, b = totals.alias("a"), totals.alias("b")
     offsets = (
@@ -429,11 +426,15 @@ def dist_running(
             o, F.greatest(F.col(f"__loc_{o}"), F.col(f"__off_{o}"))
         )
     allo = list(sums) + list(maxs)
-    return res.drop(
+    res = res.drop(
         pid,
         *[f"__loc_{o}" for o in allo],
         *[f"__off_{o}" for o in allo],
     )
+    if keep_total:
+        total = totals.agg(F.sum("__cnt").alias(keep_total))
+        res = res.crossJoin(F.broadcast(total))
+    return res
 
 
 def topk_with_rank(df, order_by, k: int, out: str = "rank"):

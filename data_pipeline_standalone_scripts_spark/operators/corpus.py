@@ -32,6 +32,7 @@ from ..tables import load, table_path
 from .common import (
     dist_row_number,
     h60,
+    half_away_long,
     o_h60,
     scan_splits_hint,
     table_bytes,
@@ -798,22 +799,13 @@ def q_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         tf, [("freq", "desc"), ("tok", "asc")], "rk"
     ).select("freq", "rk")
 
-    def q6(c):
-        v = c * 1_000_000
-        return (
-            v + F.when(v >= 0, F.lit(0.5)).otherwise(F.lit(-0.5))
-        ).cast("long")
-
     terms = ranked.select(
-        q6(F.log(F.col("rk").cast("double"))).alias("x"),
-        q6(F.log(F.col("freq").cast("double"))).alias("y"),
+        half_away_long(F.log(F.col("rk").cast("double")), 1_000_000).alias("x"),
+        half_away_long(F.log(F.col("freq").cast("double")), 1_000_000).alias("y"),
     )
 
     def requant(prod):
-        v = prod.cast("double") / 1_000_000
-        return (
-            v + F.when(v >= 0, F.lit(0.5)).otherwise(F.lit(-0.5))
-        ).cast("long")
+        return half_away_long(prod.cast("double") / 1_000_000)
 
     moms = terms.agg(
         F.count(F.lit(1)).alias("n"),

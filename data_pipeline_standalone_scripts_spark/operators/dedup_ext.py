@@ -26,8 +26,9 @@ from ..tables import load
 from .common import (
     dist_row_number,
     h60,
+    half_away_long_np,
     o_h60,
-    table_bytes,
+    quantize_micro,
     tracked_persist,
 )
 from .llm import (
@@ -38,6 +39,7 @@ from .llm import (
     N_MINHASH,
     _dot,
     _norm_sq,
+    _token_array_sides,
     _vec_double,
     minhash_candidates,
 )
@@ -1090,7 +1092,7 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     only rounding path — matched by construction. Still a pure
     narrow stage: no shuffle, partition-parallel at any corpus size.
 
-    Half-away-from-zero rounding is spelled trunc(q ± 0.5): quotients
+    Half-away-from-zero rounding is common.half_away_long_np: quotients
     are never exact halves and the max element lands on exactly ±127.
     """
     import numpy as np
@@ -1115,8 +1117,7 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
             safe = np.where(zero, 1.0, sc)
             Q = X / safe[:, None]
             Y = (
-                np.trunc(Q + np.where(Q >= 0, 0.5, -0.5))
-                .astype(np.int64)
+                half_away_long_np(Q)
                 .astype(np.float64)
                 * safe[:, None]
             )
@@ -1590,7 +1591,6 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame; `localCheckpoint` pins the selected set per step to keep
     the lazy plan linear (the data never reaches the driver).
     """
-    from .clustering import _quantize_micro
     from .llm import _vec_double
 
     def dot(a: str, b: str):
@@ -1601,7 +1601,7 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     e = load(spark, sf_dir, "embeddings")
-    vec = e.select("vec_id", _quantize_micro(_vec_double()).alias("xq"))
+    vec = e.select("vec_id", quantize_micro(_vec_double()).alias("xq"))
     qv = vec.filter(F.col("vec_id") == 0).select(F.col("xq").alias("qx"))
     cand = (
         vec.filter(F.col("vec_id") != 0)
@@ -2247,11 +2247,11 @@ def q_minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: identical orchestration to L8 — linear signature pass,
     banded candidates, exact verify via codegen array_intersect on
-    hashed token arrays; never an all-pairs join. The verify join is
-    broadcast ONLY while the documents table is < 512 MB on disk
-    (table_bytes probe — arrays are ~8 B/distinct token, so this
-    keeps far under the 8 GB broadcast cap); above that the hint is
-    dropped and AQE picks the strategy.
+    hashed token arrays; never an all-pairs join. The verify join
+    takes L8's size guard (llm._token_array_sides): broadcast only
+    while the documents table is known to be ≤ 512 MB on disk; above
+    that, or at unknown size, the hint is dropped and AQE picks the
+    strategy.
     Caveat (documented, shared with L8): banding targets Jaccard, so
     a tiny-doc-inside-huge-doc pair can have containment 1.0 yet low
     Jaccard and be missed by the candidate stage; a production
@@ -2268,30 +2268,12 @@ def q_minhash_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     docstring (SCALE.md determinism ledger).
     """
     cand = minhash_candidates(spark, sf_dir)
-    d = load(spark, sf_dir, "documents")
-    arrs = d.select(
-        "doc_id",
-        F.array_sort(
-            F.transform(
-                F.array_distinct(F.split("text", " ")), lambda t: F.xxhash64(t)
-            )
-        ).alias("toks"),
-    )
-    # Broadcast bound: the hashed token arrays are ~8 B/distinct token,
-    # roughly the raw text's parquet footprint. Both join sides carry
-    # the FULL per-document arrays, so an unconditional F.broadcast
-    # would hit Spark's 8 GB broadcast cap (or driver memory) long
-    # before the documented sf>=1 shuffle caveat. Above the threshold
-    # we drop the hint and let AQE pick the strategy at runtime.
-    _bcast_ok = table_bytes(sf_dir, "documents") < 1 << 29  # 512 MB
-    _hint = F.broadcast if _bcast_ok else (lambda x: x)
-    aa = arrs.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("ta"))
-    bb = arrs.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("tb"))
+    aa, bb = _token_array_sides(spark, sf_dir)
     n_common = F.size(F.array_intersect("ta", "tb"))
     cont = n_common.cast("double") / F.least(F.size("ta"), F.size("tb"))
     return (
-        cand.join(_hint(aa), "doc_a")
-        .join(_hint(bb), "doc_b")
+        cand.join(aa, "doc_a")
+        .join(bb, "doc_b")
         .filter(cont >= CONTAIN_THRESH)
         .select(
             "doc_a",

@@ -21,7 +21,7 @@ from pyspark.sql.window import Window
 
 from ..registry import register
 from ..tables import load
-from .common import DEC, dist_running, dsum, o_dsum
+from .common import DEC, dist_running, dsum, half_away_long, o_dsum
 
 CAT = "events"
 
@@ -344,12 +344,7 @@ def q_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_converted_clicks"),
         F.countDistinct("user_id").alias("n_users"),
         (
-            F.sum(
-                (
-                    lag_us * 1_000_000
-                    + F.when(lag_us >= 0, F.lit(0.5)).otherwise(F.lit(-0.5))
-                ).cast("long")
-            )
+            F.sum(half_away_long(lag_us, 1_000_000))
             / 1_000_000.0
         ).alias("total_lag_seconds"),
     )

@@ -22,23 +22,20 @@ from pyspark.sql.window import Window
 
 from ..registry import register
 from ..tables import load
-from .common import scan_splits_hint, table_bytes, tracked_persist
+from .common import half_away_long, scan_splits_hint, table_bytes, tracked_persist
 
-# q_minhash_lsh's verify stage broadcasts the doc→token-array table
-# only while it fits an executor; past this cap (or when the layout
-# can't be probed — non-local URI) it switches to plain doc_id hash
-# joins, making the long-documented at-scale fallback REAL instead of
-# prose (VERDICT r09 #5: past the 8 GB broadcast ceiling the op must
-# degrade, not break). 2 GB of parquet is conservative headroom: the
-# in-memory long-array rows decompress ~2-3x. NOTE: the probe measures
-# WHOLE-TABLE parquet bytes as a proxy for the projected doc→token-array
-# build side — a corpus with a wide non-text payload column trips the
-# hash-join branch far below the real broadcast limit (safe, never
-# incorrect); such deployments should raise this cap accordingly.
-MINHASH_BROADCAST_MAX_BYTES_CONF = (
-    "spark.data_pipeline_standalone_scripts.minhash.broadcast_max_bytes"
-)
-_MINHASH_BROADCAST_MAX_BYTES = 2_000_000_000
+# The exact-verify stages of q_minhash_lsh and q_minhash_containment
+# join candidate pairs to per-document token arrays (both sides carry
+# the FULL arrays). Those tables broadcast only while the documents
+# table is KNOWN to be small: past the cap — or when its layout can't
+# be probed (table_bytes = 0, e.g. a non-local URI) — the hint drops
+# and the verify becomes two doc_id hash joins, so the op degrades to a
+# shuffle instead of breaking on the 8 GB broadcast ceiling (VERDICT
+# r09 #5). The probe measures WHOLE-TABLE parquet bytes as a proxy for
+# the projected build side; in-memory long-array rows decompress
+# ~2-3x, so 512 MB keeps both sides far under the cap and the driver
+# heap.
+_TOKEN_ARRAYS_BROADCAST_MAX_BYTES = 1 << 29
 
 CAT = "llm"
 
@@ -513,6 +510,27 @@ def minhash_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.repartition(n_dedup, "doc_a", "doc_b").distinct()
 
 
+def _token_array_sides(spark: SparkSession, sf_dir: str):
+    """The two sides ``(doc_a, ta)`` and ``(doc_b, tb)`` of the
+    exact-verify join: each document's distinct tokens hashed to a
+    sorted LONG array, broadcast-hinted only while ``table_bytes``
+    knows the documents table is under
+    ``_TOKEN_ARRAYS_BROADCAST_MAX_BYTES`` (unknown size = no hint)."""
+    arrs = load(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.array_sort(
+            F.transform(
+                F.array_distinct(F.split("text", " ")), lambda t: F.xxhash64(t)
+            )
+        ).alias("toks"),
+    )
+    aa = arrs.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("ta"))
+    bb = arrs.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("tb"))
+    if 0 < table_bytes(sf_dir, "documents") <= _TOKEN_ARRAYS_BROADCAST_MAX_BYTES:
+        aa, bb = F.broadcast(aa), F.broadcast(bb)
+    return aa, bb
+
+
 @register("q_minhash_lsh", oracle=_ORACLE_JACCARD_PAIRS, category=CAT)
 def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L8: scalable near-dup — MinHash-LSH candidates, then EXACT
@@ -536,31 +554,9 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # array_intersect over 8-byte longs beats string arrays ~3× at
     # 12 M candidate pairs, and the global vocabulary (~40 tokens)
     # makes xxhash64 collisions impossible to miss in parity. The
-    # doc→array table broadcasts here WHILE IT FITS (size guard below,
-    # VERDICT r09 #5); past the cap — or when the layout can't be
-    # probed — it becomes the two documented doc_id hash joins, so the
-    # op degrades to a shuffle instead of breaking on the 8 GB
-    # broadcast ceiling. Still never an explode either way.
-    d = load(spark, sf_dir, "documents")
-    arrs = d.select(
-        "doc_id",
-        F.array_sort(
-            F.transform(
-                F.array_distinct(F.split("text", " ")), lambda t: F.xxhash64(t)
-            )
-        ).alias("toks"),
-    )
-    cap = int(
-        spark.conf.get(
-            MINHASH_BROADCAST_MAX_BYTES_CONF, str(_MINHASH_BROADCAST_MAX_BYTES)
-        )
-    )
-    nbytes = table_bytes(sf_dir, "documents")
-    small_enough = 0 < nbytes <= cap
-    aa = arrs.select(F.col("doc_id").alias("doc_a"), F.col("toks").alias("ta"))
-    bb = arrs.select(F.col("doc_id").alias("doc_b"), F.col("toks").alias("tb"))
-    if small_enough:
-        aa, bb = F.broadcast(aa), F.broadcast(bb)
+    # doc→array tables broadcast under _token_array_sides' size guard
+    # and become doc_id hash joins past it — never an explode either way.
+    aa, bb = _token_array_sides(spark, sf_dir)
     n_common = F.size(F.array_intersect("ta", "tb"))
     jac = n_common.cast("double") / (
         F.size("ta") + F.size("tb") - n_common
@@ -1033,8 +1029,7 @@ def q_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    micros = score * 1_000_000
-    term = (micros + F.when(micros >= 0, F.lit(0.5)).otherwise(F.lit(-0.5))).cast("long")
+    term = half_away_long(score, 1_000_000)
     return (
         tf.join(F.broadcast(dfreq), "token")
         .select("doc_id", term.alias("m"))

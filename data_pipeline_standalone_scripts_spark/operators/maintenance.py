@@ -19,7 +19,7 @@ from pyspark.sql.window import Window
 
 from ..registry import register
 from ..tables import load, register_views
-from .common import dist_running, tracked_persist
+from .common import _range_pinned, dist_running
 
 CAT = "maintenance"
 
@@ -535,16 +535,7 @@ def q_rle_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_returnflag").alias("rf"),
             F.col("l_linestatus").alias("ls"),
         )
-        # persist pins one pid assignment across the lag/endpoint
-        # branches (common.dist_row_number: without it each branch
-        # samples its own range bounds)
-        ranged = (
-            tracked_persist(
-                proj.repartitionByRange(32, *keys).withColumn(
-                    "pid", F.spark_partition_id()
-                )
-            )
-        )
+        ranged = _range_pinned(proj, keys, 32, "pid")
         w_loc = Window.partitionBy("pid").orderBy(*keys)
         lagd = ranged.select(
             "rf",

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..tables import load, register_views
-from .common import dist_running
+from .common import dist_running, quantize_micro
 
 CAT = "mlfit"
 
@@ -331,11 +331,10 @@ def q_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    from .clustering import _quantize_micro
     from .llm import _vec_double
 
     e = load(spark, sf_dir, "embeddings")
-    vec = e.select("vec_id", "label", _quantize_micro(_vec_double()).alias("xq"))
+    vec = e.select("vec_id", "label", quantize_micro(_vec_double()).alias("xq"))
     qv = vec.filter(F.col("vec_id") < _NDCG_QUERIES).select(
         F.col("vec_id").alias("qid"),
         F.col("label").alias("qlabel"),
@@ -637,12 +636,11 @@ def q_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    from .clustering import _quantize_micro
     from .llm import _vec_double as vec_double
 
     e = load(spark, sf_dir, "embeddings")
     vec = e.select(
-        "vec_id", "label", _quantize_micro(vec_double()).alias("xq")
+        "vec_id", "label", quantize_micro(vec_double()).alias("xq")
     )
     anchors = vec.filter(F.col("vec_id") < _N_ANCHORS).select(
         F.col("vec_id").alias("a_id"),

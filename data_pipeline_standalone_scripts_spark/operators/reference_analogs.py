@@ -33,7 +33,7 @@ from pyspark.sql.window import Window
 
 from ..registry import register
 from ..tables import load
-from .common import davg, h60, o_davg, o_h60
+from .common import davg, h60, half_away_long, o_davg, o_h60
 from .llm import _vec_double
 from .raster2d import ATROUS_KSIGMA_K
 
@@ -234,9 +234,7 @@ def q_connected_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
         "grp",
         F.col("pos") - F.row_number().over(Window.partitionBy("vec_id").orderBy("pos")),
     )
-    micros = (F.col("v") * 1_000_000 + F.when(F.col("v") >= 0, 0.5).otherwise(-0.5)).cast(
-        "long"
-    )
+    micros = half_away_long(F.col("v"), 1_000_000)
     islands = above.groupBy("vec_id", "label", "grp").agg(
         F.count(F.lit(1)).alias("island_size"),
         F.sum(micros).alias("signal_micro"),

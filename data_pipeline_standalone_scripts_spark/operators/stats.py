@@ -33,7 +33,7 @@ from pyspark.sql.window import Window
 
 from ..registry import register
 from ..tables import load
-from .common import dist_running
+from .common import dist_running, half_away_long
 
 CAT = "stats"
 
@@ -295,10 +295,7 @@ def q_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
         / (F.col("nx").cast("double") * F.col("ny"))
     )
     hxy_term = -p * F.log(F.col("nxy").cast("double") / F.col("nn"))
-    nano = lambda c: (
-        c * 1_000_000_000
-        + F.when(c >= 0, F.lit(0.5)).otherwise(F.lit(-0.5))
-    ).cast("long")
+    nano = lambda c: half_away_long(c, 1_000_000_000)
     return t.select(
         nano(mi_term).alias("mi_n"), nano(hxy_term).alias("h_n")
     ).agg(

@@ -21,7 +21,7 @@ from pyspark.sql.window import Window
 
 from ..registry import register
 from ..tables import load
-from .common import h60, o_h60, tracked_persist
+from .common import h60, half_away_long, o_h60, tracked_persist
 
 CAT = "textpipe"
 
@@ -203,7 +203,8 @@ def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     for single-row-group local scans) is unchanged and still gated.
     Non-ASCII text raises a ValueError naming the doc_id instead of
     silently overflowing the 8-byte budget — the documented ASCII
-    constraint made loud."""
+    constraint made loud; a NULL doc_id raises a ValueError naming the
+    column."""
     d = (
         load(spark, sf_dir, "documents")
         .filter(F.length("text") >= K_GRAM)
@@ -224,6 +225,11 @@ def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
             texts = batch.column(1).to_pylist()
             out_i, out_f = [], []
             for did, txt in zip(ids, texts):
+                if did is None:
+                    raise ValueError(
+                        "winnowing needs a non-NULL doc_id; a document "
+                        "has NULL doc_id"
+                    )
                 try:
                     raw = txt.encode("ascii")
                 except UnicodeEncodeError as err:
@@ -600,10 +606,7 @@ def q_ngram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     nll = -F.log(
         (F.col("c2") + float(BIGRAM_ADD_K)) / (F.col("c1") + F.col("vv"))
     )
-    micros = nll * 1_000_000
-    term = (micros + F.when(micros >= 0, F.lit(0.5)).otherwise(F.lit(-0.5))).cast(
-        "long"
-    )
+    term = half_away_long(nll, 1_000_000)
     avg = F.col("msum").cast("double") / 1_000_000.0 / (F.col("n") - 1)
     # The reported avg_nll is rounded IN INTEGER ARITHMETIC:
     # round6(msum/1e6/nb) == round-to-int of msum/nb in micro-nats ==
@@ -985,10 +988,7 @@ def q_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = Window.partitionBy("doc_id")
     p = F.col("c").cast("double") / F.col("n")
-    micros = -p * F.log2(p) * 1_000_000
-    term = (micros + F.when(micros >= 0, F.lit(0.5)).otherwise(F.lit(-0.5))).cast(
-        "long"
-    )
+    term = half_away_long(-p * F.log2(p), 1_000_000)
     return (
         tf.withColumn("n", F.sum("c").over(w))
         .withColumn("nd", F.count(F.lit(1)).over(w))

@@ -137,3 +137,17 @@ def test_winnow_non_ascii_names_doc_id(spark, tmp_path):
     )
     with pytest.raises(Exception, match="987654321"):
         REGISTRY["q_fingerprint_winnow"].fn(spark, sf_dir).collect()
+
+
+def test_winnow_null_doc_id_names_column(spark, tmp_path):
+    """A NULL doc_id must fail with a ValueError naming the doc_id
+    column, not a raw TypeError from np.full in the Python worker."""
+    sf_dir = _write_documents(
+        spark, tmp_path,
+        [
+            (1, "plain ascii text here", "en", "web", 21),
+            (None, "another plain document", "en", "web", 22),
+        ],
+    )
+    with pytest.raises(Exception, match="NULL doc_id"):
+        REGISTRY["q_fingerprint_winnow"].fn(spark, sf_dir).collect()

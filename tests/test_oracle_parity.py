@@ -11,15 +11,49 @@ from data_pipeline_standalone_scripts_spark.registry import REGISTRY
 engine.load_all_operators()
 
 
-@pytest.mark.parametrize("name", sorted(REGISTRY))
-def test_query_parity(name, spark, sf_small):
+def _assert_parity(name, spark, sf_dir):
     spark.catalog.clearCache()  # the cache assertion measures this query only
-    rep = check_query(name, spark, sf_small)
+    rep = check_query(name, spark, sf_dir)
     assert rep.ok, str(rep)
     # every operator-held cache went through the persist ledger
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
         f"{name} left a cached plan behind"
     )
+
+
+@pytest.mark.parametrize("name", sorted(REGISTRY))
+def test_query_parity(name, spark, sf_small):
+    _assert_parity(name, spark, sf_small)
+
+
+# Every caller of the range-rank primitive (common._range_pinned, via
+# dist_running / dist_row_number / dist_ntile or directly) and of the
+# integer Lloyd kernel (clustering._lloyd). At sf0.001 the 32 range
+# partitions mostly hold zero or one row, so the per-partition running
+# aggregates and prefix offsets are only really exercised at sf0.01.
+CONSOLIDATED_CALLERS = [
+    "q_pareto_skyline",
+    "q_late_data_watermark",
+    "q_zipf_slope",
+    "q_gini_revenue",
+    "q_rfm_segmentation",
+    "q_auc_score",
+    "q_pr_curve",
+    "q_ppjoin_neardup",
+    "q_compaction_plan",
+    "q_rle_advisor",
+    "q_ks_test",
+    "q_mannwhitney_u",
+    "q_exact_median_twopass",
+    "q_win_ntile_pct",
+    "q_kmeans_embed",
+    "q_semantic_dedup",
+]
+
+
+@pytest.mark.parametrize("name", CONSOLIDATED_CALLERS)
+def test_consolidated_callers_parity_sf_med(name, spark, sf_med):
+    _assert_parity(name, spark, sf_med)
 
 
 def test_registry_contract():

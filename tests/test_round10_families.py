@@ -32,14 +32,12 @@ def _plan_of(df) -> str:
     )
 
 
-def test_minhash_verify_guard_branches(spark):
+def test_minhash_verify_guard_branches(spark, monkeypatch):
     """The verify stage's doc→token-array broadcast must be a size-
     CONDITIONAL branch: under the default cap the fixture broadcasts;
     with the cap forced to 0 the same op plans plain doc_id joins —
     and both branches return identical values."""
-    from data_pipeline_standalone_scripts_spark.operators.llm import (
-        MINHASH_BROADCAST_MAX_BYTES_CONF,
-    )
+    from data_pipeline_standalone_scripts_spark.operators import llm
 
     reg = REGISTRY["q_minhash_lsh"]
     # disable Catalyst's size-based auto-broadcast so the plan shows
@@ -50,13 +48,11 @@ def test_minhash_verify_guard_branches(spark):
     try:
         small_df = reg.fn(spark, SF)
         plan_small = _plan_of(small_df)
-        spark.conf.set(MINHASH_BROADCAST_MAX_BYTES_CONF, "0")
-        try:
+        with monkeypatch.context() as m:
+            m.setattr(llm, "_TOKEN_ARRAYS_BROADCAST_MAX_BYTES", 0)
             big_df = reg.fn(spark, SF)
-            plan_big = _plan_of(big_df)
-            big = sorted(map(tuple, big_df.collect()))
-        finally:
-            spark.conf.unset(MINHASH_BROADCAST_MAX_BYTES_CONF)
+        plan_big = _plan_of(big_df)
+        big = sorted(map(tuple, big_df.collect()))
         small = sorted(map(tuple, small_df.collect()))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
@@ -67,6 +63,23 @@ def test_minhash_verify_guard_branches(spark):
         > plan_big.count("BroadcastHashJoin")
     ), (plan_small.count("BroadcastHashJoin"), plan_big.count("BroadcastHashJoin"))
     assert plan_big.count("SortMergeJoin") > plan_small.count("SortMergeJoin")
+
+
+def test_minhash_containment_unknown_size_no_broadcast(spark, monkeypatch):
+    """Unknown documents size (table_bytes = 0, e.g. a non-local URI)
+    must drop the token-array broadcast hint in the containment query
+    too — the same guard as q_minhash_lsh's verify stage."""
+    from data_pipeline_standalone_scripts_spark.operators import dedup_ext, llm
+
+    for mod in (llm, dedup_ext):
+        monkeypatch.setattr(mod, "table_bytes", lambda *a: 0, raising=False)
+    thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        plan = _plan_of(REGISTRY["q_minhash_containment"].fn(spark, SF))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
+    assert "BroadcastHashJoin" not in plan
 
 
 def test_bpe_coalesce_guard_branches(spark):

@@ -30,16 +30,16 @@ def _power_iteration_r12(spark, sf_dir):
     """The r12 Column formulation of q_power_iteration_pc, verbatim
     (broadcast matvec per step, whole-frame norm window) — the value
     pin for the fused single-partition kernel."""
-    from data_pipeline_standalone_scripts_spark.operators.clustering import (
-        _half_away_long,
-        _quantize_micro,
+    from data_pipeline_standalone_scripts_spark.operators.common import (
+        half_away_long,
+        quantize_micro,
     )
     from data_pipeline_standalone_scripts_spark.operators.llm import (
         _vec_double,
     )
 
     emb = load(spark, sf_dir, "embeddings")
-    vec = emb.select("vec_id", _quantize_micro(_vec_double()).alias("xq"))
+    vec = emb.select("vec_id", quantize_micro(_vec_double()).alias("xq"))
 
     def partial_s(batches):
         for pdf in batches:
@@ -70,7 +70,7 @@ def _power_iteration_r12(spark, sf_dir):
         F.sum("v").alias("sv"), F.count(F.lit(1)).alias("n")
     )
     stats = stats.withColumn(
-        "mu", _half_away_long(F.col("sv").cast("double") / F.col("n"))
+        "mu", half_away_long(F.col("sv").cast("double") / F.col("n"))
     )
     gi = stats.select(
         F.col("pos").alias("i"),
@@ -95,7 +95,7 @@ def _power_iteration_r12(spark, sf_dir):
         .select(
             "i",
             "j",
-            _half_away_long(centered_ij.cast("double") / 100000).alias("gu"),
+            half_away_long(centered_ij.cast("double") / 100000).alias("gu"),
         )
     )
     v_cur = stats.select(
@@ -113,13 +113,13 @@ def _power_iteration_r12(spark, sf_dir):
             .agg(F.sum(F.col("gu") * F.col("vq")).alias("w"))
             .select(F.col("i").alias("pos"), "w")
         )
-        u = _half_away_long(F.col("w").cast("double") / 10000000000)
+        u = half_away_long(F.col("w").cast("double") / 10000000000)
         wn = w.withColumn(
             "nrm", F.sqrt(F.sum(u * u).over(w_all).cast("double"))
         )
         v_cur = wn.select(
             "pos",
-            _half_away_long(
+            half_away_long(
                 F.col("w").cast("double") / 10000000000 / F.col("nrm") * 1000000
             ).alias("vq"),
         )

@@ -432,16 +432,16 @@ def test_pq_adc_approximates_exact_neighbors(spark, sf_small):
     codebook (KM1's Lloyd pass per subspace) raises it."""
     import pyspark.sql.functions as F
 
-    from data_pipeline_standalone_scripts_spark.operators.clustering import (
-        _d2,
-        _quantize_micro,
+    from data_pipeline_standalone_scripts_spark.operators.clustering import _d2
+    from data_pipeline_standalone_scripts_spark.operators.common import (
+        quantize_micro,
     )
     from data_pipeline_standalone_scripts_spark.operators.llm import _vec_double
 
     adc = {r["vec_id"] for r in _run("q_pq_adc_topk", spark, sf_small).collect()}
     assert len(adc) == 10
     vec = load(spark, sf_small, "embeddings").select(
-        "vec_id", _quantize_micro(_vec_double()).alias("xq")
+        "vec_id", quantize_micro(_vec_double()).alias("xq")
     )
     q = vec.filter(F.col("vec_id") == 0).select(F.col("xq").alias("qx"))
     exact50 = {
