@@ -221,18 +221,18 @@ def q_kmeans_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     cache that fuses assignment + per-batch cluster statistics
     (counts, per-dimension sums, Σd²) — no broadcast exchange, no
     k-way row duplication, no per-vector argmin shuffle, no
-    64-column SQL aggregation (measured 0.67 s alone). 3 jobs total:
-    init-collect, pass-1 stats (materializes the cache), pass-2
-    stats — the shared :func:`_lloyd` kernel runs the seeding, pass 1
-    and the update. All arithmetic is exact int64 (see
-    :func:`_nearest`); the driver-side re-quantization repeats the
-    identical IEEE-754 double divide + half-away trunc as the
-    oracle's SQL, and the final round(6) is the same half-up the SQL
-    round applies — so every value hash-matches DuckDB. Measured:
-    absolute gap 1.7 s (r02 epoch-adjusted) → 0.72 s; the remaining
-    ~0.9 s wall is 3 local job floors + Arrow round trips, the class
-    BASELINE.md carves out as fixed overhead that amortizes on a
-    real cluster.
+    64-column SQL aggregation (measured 0.67 s alone). Building the
+    query runs 3 jobs: init-collect, pass-1 stats (materializes the
+    cache), pass-2 stats — the shared :func:`_lloyd` kernel runs the
+    seeding, pass 1 and the update. Executing it runs 1 job over the
+    k result rows, which are local data sent over Arrow: a
+    parallelized RDD would be wrapped in a Python map and start a
+    Python-worker task to hand back k rows. All
+    arithmetic is exact int64 (see :func:`_nearest`); the driver-side
+    re-quantization repeats the identical IEEE-754 double divide +
+    half-away trunc as the oracle's SQL, and the final round(6) is
+    the same half-up the SQL round applies — so every value
+    hash-matches DuckDB.
     """
     import math
 
@@ -259,9 +259,9 @@ def q_kmeans_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
         for cid, (n, sd2, _s) in sorted(stats.items())
     ]
     return spark.createDataFrame(
-        # single slice: the default parallelize fans 8 rows over 32
-        # tasks and pays ~0.3 s of pure scheduling on every action
-        spark.sparkContext.parallelize(rows, 1),
+        pd.DataFrame(
+            rows, columns=["cluster_id", "n_members", "inertia_micro2", "rms_dist"]
+        ),
         "cluster_id long, n_members long, inertia_micro2 long, rms_dist double",
     )
 
