@@ -12,7 +12,7 @@ Public surface:
 - ``registry.REGISTRY`` — every query from SURVEY.md §2, with oracle SQL.
 - ``registry.run()`` — build, execute once and release one query.
 - ``session.get_spark()`` — tuned local SparkSession factory.
-- ``tables.load`` / ``tables.register_views`` — the ten test tables.
+- ``tables.load`` — the ten test tables.
 """
 
 __version__ = "0.1.0"

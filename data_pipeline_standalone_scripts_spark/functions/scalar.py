@@ -571,9 +571,6 @@ def q_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no serialization boundary, no black box to the optimizer —
     pushdown THROUGH the function still works).
     """
-    from ..tables import register_views
-
-    register_views(spark, sf_dir, "lineitem")
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION disc_price(p DOUBLE,"
         " d DOUBLE) RETURNS DOUBLE RETURN p * (1 - d)"
@@ -594,8 +591,9 @@ def q_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(SUM(CAST(round(charge(l_extendedprice, l_discount,
                                           l_tax) * 1000000) AS BIGINT))
                    AS BIGINT) AS charge_micro
-        FROM lineitem GROUP BY 1
-        """
+        FROM {lineitem} GROUP BY 1
+        """,
+        lineitem=load(spark, sf_dir, "lineitem"),
     )
 
 
@@ -696,10 +694,10 @@ _SCRIPTING_SQL = f"""
 BEGIN
   DECLARE threshold BIGINT DEFAULT {_SCRIPT_START};
   DECLARE tail_n BIGINT DEFAULT 0;
-  SET tail_n = (SELECT COUNT(*) FROM orders WHERE o_totalprice > threshold);
+  SET tail_n = (SELECT COUNT(*) FROM {{orders}} WHERE o_totalprice > threshold);
   WHILE tail_n > {_SCRIPT_MAX_TAIL} DO
     SET threshold = threshold * 2;
-    SET tail_n = (SELECT COUNT(*) FROM orders WHERE o_totalprice > threshold);
+    SET tail_n = (SELECT COUNT(*) FROM {{orders}} WHERE o_totalprice > threshold);
   END WHILE;
   SELECT threshold, tail_n;
 END
@@ -741,11 +739,7 @@ def q_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     footer-metadata-light aggregate; procedural state (two BIGINTs)
     lives on the driver, never the data path.
     """
-    from ..tables import register_views
-
-    register_views(spark, sf_dir, "orders")
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    return spark.sql(_SCRIPTING_SQL)
+    return spark.sql(_SCRIPTING_SQL, orders=load(spark, sf_dir, "orders"))
 
 
 @register(
@@ -848,9 +842,6 @@ def q_bitmask_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     specifically replaces an expand+distinct two-phase plan with a
     plain OR fold.
     """
-    from ..tables import register_views
-
-    register_views(spark, sf_dir, "events")
     return spark.sql(f"""
         SELECT user_id,
                type_mask,
@@ -862,6 +853,6 @@ def q_bitmask_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
                    CAST(bit_xor({_TYPE_BITS}) AS BIGINT) AS xor_mask,
                    bool_and(value >= 0) AS all_nonneg,
                    bool_or(event_type = 'error') AS any_error
-            FROM events GROUP BY user_id
+            FROM {{events}} GROUP BY user_id
         )
-    """)
+    """, events=load(spark, sf_dir, "events"))

@@ -233,17 +233,15 @@ def q_agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7: explicit GROUPING SETS via the SQL entry point (E3 in
     SURVEY §3.2) — segment totals, nation totals, grand total."""
-    from ..tables import register_views
-
-    register_views(spark, sf_dir, "customer")
     return spark.sql(
         """
         SELECT c_mktsegment, c_nationkey,
                COUNT(*) AS n,
                CAST(SUM(CAST(c_acctbal AS DECIMAL(24,6))) AS DOUBLE) AS sum_bal
-        FROM customer
+        FROM {customer}
         GROUP BY GROUPING SETS ((c_mktsegment), (c_nationkey), ())
-        """
+        """,
+        customer=load(spark, sf_dir, "customer"),
     )
 
 
@@ -593,12 +591,16 @@ _GROUP_BY_ALL_SQL = """
            COUNT(*) AS n,
            CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
                AS total_cents
-    FROM orders
+    FROM {orders}
     GROUP BY ALL
 """
 
 
-@register("q_group_by_all", oracle=_GROUP_BY_ALL_SQL, category="aggregates")
+@register(
+    "q_group_by_all",
+    oracle=_GROUP_BY_ALL_SQL.format(orders="orders"),
+    category="aggregates",
+)
 def q_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A17: `GROUP BY ALL` — the modern-SQL sugar (grouping keys
     inferred as every non-aggregate select item) that Spark 4 and
@@ -609,10 +611,7 @@ def q_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: sugar only — resolves to the identical partial/final hash
     aggregate as the explicit GROUP BY; nothing physical changes.
     """
-    from ..tables import register_views
-
-    register_views(spark, sf_dir, "orders")
-    return spark.sql(_GROUP_BY_ALL_SQL)
+    return spark.sql(_GROUP_BY_ALL_SQL, orders=load(spark, sf_dir, "orders"))
 
 
 # Pipe-syntax query (Spark 4 / GoogleSQL "FROM ... |>"): the Spark
@@ -620,7 +619,7 @@ def q_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 # classic SQL (DuckDB has no pipe parser), so the check covers the
 # pipe operators' desugaring, not just the arithmetic.
 _PIPE_SQL = """
-    FROM orders
+    FROM {orders}
     |> WHERE o_orderstatus = 'F'
     |> EXTEND CAST(round(o_totalprice * 100) AS BIGINT) AS cents
     |> AGGREGATE COUNT(*) AS n, CAST(SUM(cents) AS BIGINT) AS total_cents
@@ -651,10 +650,7 @@ def q_pipe_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     optimized plan (pushed filter, two-phase hash aggregate) as the
     classic text; nothing physical changes.
     """
-    from ..tables import register_views
-
-    register_views(spark, sf_dir, "orders")
-    return spark.sql(_PIPE_SQL)
+    return spark.sql(_PIPE_SQL, orders=load(spark, sf_dir, "orders"))
 
 
 _MEDIAN_BINS = 1024
@@ -762,12 +758,14 @@ _GROUPING_ID_SQL = """
            CAST(GROUPING(l_returnflag) * 2 + GROUPING(l_linestatus)
                 AS BIGINT) AS gid,
            COUNT(*) AS n
-    FROM lineitem
+    FROM {lineitem}
     GROUP BY ROLLUP (l_returnflag, l_linestatus)
 """
 
 
-@register("q_grouping_id", oracle=_GROUPING_ID_SQL, category=CAT)
+@register(
+    "q_grouping_id", oracle=_GROUPING_ID_SQL.format(lineitem="lineitem"), category=CAT
+)
 def q_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A20: the GROUPING()/GROUPING_ID() surface — ROLLUP subtotal
     rows DISAMBIGUATED from genuine NULL keys by the grouping flags
@@ -781,7 +779,4 @@ def q_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical Expand + two-phase aggregate as A5's plain
     rollup; the flags are free metadata columns of the Expand.
     """
-    from ..tables import register_views
-
-    register_views(spark, sf_dir, "lineitem")
-    return spark.sql(_GROUPING_ID_SQL)
+    return spark.sql(_GROUPING_ID_SQL, lineitem=load(spark, sf_dir, "lineitem"))

@@ -834,9 +834,6 @@ def q_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
 # holds only while the bigram vocabulary fits one task; past this row
 # cap the coalesce is dropped and the tail's tiny groupBys shuffle —
 # the documented at-scale fallback made real (VERDICT r09 #5).
-BPE_COALESCE_MAX_ROWS_CONF = (
-    "spark.data_pipeline_standalone_scripts.bpe.coalesce_max_rows"
-)
 _BPE_COALESCE_MAX_ROWS = 5_000_000
 # The row-count probe itself costs one cache-local job (~0.3 s on the
 # sf0.1 bench row — measured against the r10 quiet-epoch table), so it
@@ -846,9 +843,6 @@ _BPE_COALESCE_MAX_ROWS = 5_000_000
 # cap and the coalesce is taken with ZERO extra jobs. Unknown layout
 # (table_bytes = 0, non-local URI) runs the probe — the precise,
 # scale-safe path whose one extra job is noise at that scale.
-BPE_COUNT_PROBE_MIN_BYTES_CONF = (
-    "spark.data_pipeline_standalone_scripts.bpe.count_probe_min_bytes"
-)
 _BPE_COUNT_PROBE_MIN_BYTES = 1_000_000_000
 
 
@@ -1056,18 +1050,9 @@ def _bpe_merge_arrays(
     # cap); only a big-or-unknown corpus pays the precise row-count
     # probe, read off the just-materialized cache (the argmax action
     # above pinned it) — one cache-local job, noise at that scale.
-    spark = toks.sparkSession
-    cap = int(
-        spark.conf.get(BPE_COALESCE_MAX_ROWS_CONF, str(_BPE_COALESCE_MAX_ROWS))
-    )
-    probe_min = int(
-        spark.conf.get(
-            BPE_COUNT_PROBE_MIN_BYTES_CONF, str(_BPE_COUNT_PROBE_MIN_BYTES)
-        )
-    )
-    if corpus_bytes is not None and 0 < corpus_bytes < probe_min:
+    if corpus_bytes is not None and 0 < corpus_bytes < _BPE_COUNT_PROBE_MIN_BYTES:
         small = bigrams.coalesce(1)
-    elif bigrams.count() > cap:
+    elif bigrams.count() > _BPE_COALESCE_MAX_ROWS:
         small = bigrams
     else:
         small = bigrams.coalesce(1)

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..tables import load, register_views
+from ..tables import load
 from .common import tracked_persist
 
 CAT = "graph"
@@ -139,7 +139,7 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BFS_SQL = """
     WITH RECURSIVE e AS (
         SELECT DISTINCT l1.l_partkey AS a, l2.l_partkey AS b
-        FROM lineitem l1 JOIN lineitem l2
+        FROM {lineitem} l1 JOIN {lineitem} l2
           ON l1.l_orderkey = l2.l_orderkey
          AND l1.l_partkey <> l2.l_partkey
     ), seed AS (
@@ -159,7 +159,9 @@ _BFS_SQL = """
 """
 
 
-@register("q_recursive_bfs", oracle=_BFS_SQL, category=CAT)
+@register(
+    "q_recursive_bfs", oracle=_BFS_SQL.format(lineitem="lineitem"), category=CAT
+)
 def q_recursive_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G2: bounded BFS via WITH RECURSIVE (new in Spark 4) — hop
     distances from the lowest-keyed part through the co-purchase
@@ -174,13 +176,12 @@ def q_recursive_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     frontier at web scale by de-duplicating every k hops or switching
     to the CC-style iterate-to-fixpoint with early termination.
     """
-    register_views(spark, sf_dir, "lineitem")
-    return spark.sql(_BFS_SQL)
+    return spark.sql(_BFS_SQL, lineitem=load(spark, sf_dir, "lineitem"))
 
 
 _RECS_SQL = """
     WITH op AS (
-        SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
+        SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM {lineitem}
     ), freq AS (
         SELECT p, COUNT(*) AS c FROM op GROUP BY 1
     ), n AS (
@@ -206,7 +207,9 @@ _RECS_SQL = """
 """
 
 
-@register("q_copurchase_recs", oracle=_RECS_SQL, category=CAT)
+@register(
+    "q_copurchase_recs", oracle=_RECS_SQL.format(lineitem="lineitem"), category=CAT
+)
 def q_copurchase_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G3: "customers also bought" — top-3 recommendations per part
     ranked by lift = P(b|a)/P(b) = c_ab·N/(c_a·c_b), the co-occurrence
@@ -224,8 +227,7 @@ def q_copurchase_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair skew lands in the pair aggregation, which partial-aggregates
     before the shuffle — the classic market-basket plan.
     """
-    register_views(spark, sf_dir, "lineitem")
-    return spark.sql(_RECS_SQL)
+    return spark.sql(_RECS_SQL, lineitem=load(spark, sf_dir, "lineitem"))
 
 
 _LPA_ITERS = 3

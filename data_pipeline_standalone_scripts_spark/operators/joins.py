@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import register
-from ..tables import load, register_views
+from ..tables import load
 from .common import dsum, o_dsum, table_bytes
 
 CAT = "joins"
@@ -570,17 +570,21 @@ def q_join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _CORR_SUBQUERY_SQL = """
     SELECT o.o_orderkey, o.o_custkey, o.o_totalprice
-    FROM orders o
+    FROM {orders} o
     WHERE o.o_totalprice > 1.5 * (
             SELECT SUM(CAST(FLOOR(o2.o_totalprice * 100 + 0.5) AS BIGINT))
                    / 100.0 / COUNT(*)
-            FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
-      AND EXISTS (SELECT 1 FROM lineitem l
+            FROM {orders} o2 WHERE o2.o_custkey = o.o_custkey)
+      AND EXISTS (SELECT 1 FROM {lineitem} l
                   WHERE l.l_orderkey = o.o_orderkey AND l.l_discount >= 0.05)
 """
 
 
-@register("q_corr_subquery", oracle=_CORR_SUBQUERY_SQL, category=CAT)
+@register(
+    "q_corr_subquery",
+    oracle=_CORR_SUBQUERY_SQL.format(orders="orders", lineitem="lineitem"),
+    category=CAT,
+)
 def q_corr_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated subquery surface: a correlated SCALAR subquery (order
     beats 1.5× its customer's average spend) AND a correlated EXISTS
@@ -599,8 +603,11 @@ def q_corr_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXISTS a semi join shuffled on orderkey; nothing is per-row. Verify
     with .explain(): no Subquery nodes survive in the physical plan.
     """
-    register_views(spark, sf_dir, "orders", "lineitem")
-    return spark.sql(_CORR_SUBQUERY_SQL)
+    return spark.sql(
+        _CORR_SUBQUERY_SQL,
+        orders=load(spark, sf_dir, "orders"),
+        lineitem=load(spark, sf_dir, "lineitem"),
+    )
 
 
 # --- data maintenance (MERGE shape) ----------------------------------------
@@ -749,9 +756,9 @@ def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LATERAL_SQL = """
     SELECT n.n_name, x.c_custkey, x.c_name, x.c_acctbal
-    FROM nation n, LATERAL (
+    FROM {nation} n, LATERAL (
         SELECT c_custkey, c_name, c_acctbal
-        FROM customer c
+        FROM {customer} c
         WHERE c.c_nationkey = n.n_nationkey
         ORDER BY c_acctbal DESC, c_custkey ASC
         LIMIT 2
@@ -759,7 +766,11 @@ _LATERAL_SQL = """
 """
 
 
-@register("q_join_lateral", oracle=_LATERAL_SQL, category=CAT)
+@register(
+    "q_join_lateral",
+    oracle=_LATERAL_SQL.format(nation="nation", customer="customer"),
+    category=CAT,
+)
 def q_join_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J16: correlated LATERAL join — for each nation, its top-2
     customers by account balance, written as the SQL-standard lateral
@@ -775,8 +786,11 @@ def q_join_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     correlation key) and joined back; identical economics to a
     rank-filter top-k per group.
     """
-    register_views(spark, sf_dir, "nation", "customer")
-    return spark.sql(_LATERAL_SQL)
+    return spark.sql(
+        _LATERAL_SQL,
+        nation=load(spark, sf_dir, "nation"),
+        customer=load(spark, sf_dir, "customer"),
+    )
 
 
 @register(

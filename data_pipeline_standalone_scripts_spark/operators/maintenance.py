@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import register
-from ..tables import load, register_views
+from ..tables import load
 from .common import _range_pinned, dist_running
 
 CAT = "maintenance"
@@ -143,42 +143,43 @@ def q_partition_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_DQ_TABLES = ("orders", "customer", "lineitem", "events", "documents")
 _DQ_SQL = """
     SELECT 'orders.custkey_fk_valid' AS check_name,
-           (SELECT COUNT(*) FROM orders) AS n_checked,
-           (SELECT COUNT(*) FROM orders o
-            WHERE NOT EXISTS (SELECT 1 FROM customer c
+           (SELECT COUNT(*) FROM {orders}) AS n_checked,
+           (SELECT COUNT(*) FROM {orders} o
+            WHERE NOT EXISTS (SELECT 1 FROM {customer} c
                               WHERE c.c_custkey = o.o_custkey))
                AS n_violations
     UNION ALL
     SELECT 'orders.orderkey_unique',
-           (SELECT COUNT(*) FROM orders),
+           (SELECT COUNT(*) FROM {orders}),
            (SELECT COALESCE(CAST(SUM(n - 1) AS BIGINT), 0) FROM
-               (SELECT COUNT(*) AS n FROM orders GROUP BY o_orderkey)
+               (SELECT COUNT(*) AS n FROM {orders} GROUP BY o_orderkey)
             WHERE n > 1)
     UNION ALL
     SELECT 'orders.totalprice_positive',
-           (SELECT COUNT(*) FROM orders),
-           (SELECT COUNT(*) FROM orders WHERE o_totalprice <= 0)
+           (SELECT COUNT(*) FROM {orders}),
+           (SELECT COUNT(*) FROM {orders} WHERE o_totalprice <= 0)
     UNION ALL
     SELECT 'lineitem.quantity_in_range',
-           (SELECT COUNT(*) FROM lineitem),
-           (SELECT COUNT(*) FROM lineitem
+           (SELECT COUNT(*) FROM {lineitem}),
+           (SELECT COUNT(*) FROM {lineitem}
             WHERE l_quantity < 1 OR l_quantity > 50)
     UNION ALL
     SELECT 'lineitem.orderkey_fk_valid',
-           (SELECT COUNT(*) FROM lineitem),
-           (SELECT COUNT(*) FROM lineitem l
-            WHERE NOT EXISTS (SELECT 1 FROM orders o
+           (SELECT COUNT(*) FROM {lineitem}),
+           (SELECT COUNT(*) FROM {lineitem} l
+            WHERE NOT EXISTS (SELECT 1 FROM {orders} o
                               WHERE o.o_orderkey = l.l_orderkey))
     UNION ALL
     SELECT 'events.value_not_null',
-           (SELECT COUNT(*) FROM events),
-           (SELECT COUNT(*) FROM events WHERE value IS NULL)
+           (SELECT COUNT(*) FROM {events}),
+           (SELECT COUNT(*) FROM {events} WHERE value IS NULL)
     UNION ALL
     SELECT 'documents.text_nonempty',
-           (SELECT COUNT(*) FROM documents),
-           (SELECT COUNT(*) FROM documents
+           (SELECT COUNT(*) FROM {documents}),
+           (SELECT COUNT(*) FROM {documents}
             WHERE text IS NULL OR length(trim(text)) = 0)
 """
 
@@ -190,7 +191,7 @@ _DQ_SQL = """
                CAST(n_violations AS BIGINT) AS n_violations,
                n_violations = 0 AS passed
         FROM ({_DQ_SQL})
-    """,
+    """.format(**{t: t for t in _DQ_TABLES}),
     category=CAT,
 )
 def q_dq_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -208,16 +209,14 @@ def q_dq_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters (q_bloom_prefilter) and the uniqueness check map-side
     combines to one row per key.
     """
-    register_views(
-        spark, sf_dir, "orders", "customer", "lineitem", "events", "documents"
-    )
     return spark.sql(
         f"""
         SELECT check_name, CAST(n_checked AS BIGINT) AS n_checked,
                CAST(n_violations AS BIGINT) AS n_violations,
                n_violations = 0 AS passed
         FROM ({_DQ_SQL})
-        """
+        """,
+        **{t: load(spark, sf_dir, t) for t in _DQ_TABLES},
     )
 
 
@@ -253,7 +252,7 @@ def _profile_select(col: str, typ: str) -> str:
                {mx_num} AS max_num,
                {mn_str} AS min_str,
                {mx_str} AS max_str
-        FROM orders
+        FROM {{orders}}
     """
 
 
@@ -262,7 +261,9 @@ _PROFILE_SQL = "\n    UNION ALL\n".join(
 )
 
 
-@register("q_column_profile", oracle=_PROFILE_SQL, category=CAT)
+@register(
+    "q_column_profile", oracle=_PROFILE_SQL.format(orders="orders"), category=CAT
+)
 def q_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MT4: column-profiling report (the warehouse `DESCRIBE`/
     profiler): per column of `orders` — row count, null count, exact
@@ -281,8 +282,7 @@ def q_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     profiling use-case, same plan shape. Spark additionally exposes
     this pattern as `df.summary()`; this op keeps it oracle-checkable.
     """
-    register_views(spark, sf_dir, "orders")
-    return spark.sql(_PROFILE_SQL)
+    return spark.sql(_PROFILE_SQL, orders=load(spark, sf_dir, "orders"))
 
 
 @register(

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..tables import load, register_views
+from ..tables import load
 from .common import dist_running, quantize_micro
 
 CAT = "mlfit"
@@ -34,13 +34,14 @@ CAT = "mlfit"
 # product of two 2-dp values, so every round() recovers an exact
 # integer). The fit runs in integer space; betas unscale at the end
 # (Y = B0 + BQ·Q + BD·D  ⇒  y = B0/1e4 + (BQ/100)·q + (BD/100)·d).
-# {wide} widens the three product-moments that can exceed BIGINT.
+# {wide} widens the three product-moments that can exceed BIGINT;
+# {lineitem} is the table (its name for DuckDB, a bound frame for Spark).
 _LINREG_SQL = """
     WITH pts AS (
         SELECT CAST(round(l_quantity * 100) AS BIGINT) AS q,
                CAST(round(l_discount * 100) AS BIGINT) AS d,
                CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT) AS y
-        FROM lineitem
+        FROM {lineitem}
     ), m AS (
         SELECT CAST(COUNT(*) AS DOUBLE) AS n,
                CAST(SUM(q) AS DOUBLE) AS sq,
@@ -80,7 +81,7 @@ _LINREG_SQL = """
 
 @register(
     "q_linreg_fit",
-    oracle=_LINREG_SQL.format(wide="HUGEINT"),
+    oracle=_LINREG_SQL.format(wide="HUGEINT", lineitem="lineitem"),
     category=CAT,
 )
 def q_linreg_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -99,8 +100,10 @@ def q_linreg_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB — this is why sufficient-statistics training belongs in
     the engine.
     """
-    register_views(spark, sf_dir, "lineitem")
-    return spark.sql(_LINREG_SQL.format(wide="DECIMAL(38,0)"))
+    return spark.sql(
+        _LINREG_SQL.format(wide="DECIMAL(38,0)", lineitem="{lineitem}"),
+        lineitem=load(spark, sf_dir, "lineitem"),
+    )
 
 
 # Same integer-moment construction, grouped: one model per key. The
@@ -114,7 +117,7 @@ _LINREG_GROUP_SQL = """
                CAST(round(l_quantity * 100) AS BIGINT) AS q,
                CAST(round(l_discount * 100) AS BIGINT) AS d,
                CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT) AS y
-        FROM lineitem
+        FROM {lineitem}
     ), m AS (
         SELECT grp,
                CAST(COUNT(*) AS DOUBLE) AS n,
@@ -156,7 +159,7 @@ _LINREG_GROUP_SQL = """
 
 @register(
     "q_linreg_per_group",
-    oracle=_LINREG_GROUP_SQL.format(wide="HUGEINT"),
+    oracle=_LINREG_GROUP_SQL.format(wide="HUGEINT", lineitem="lineitem"),
     category=CAT,
 )
 def q_linreg_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -169,8 +172,10 @@ def q_linreg_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     wire carries ten numbers per GROUP, and a million groups is an
     ordinary aggregation.
     """
-    register_views(spark, sf_dir, "lineitem")
-    return spark.sql(_LINREG_GROUP_SQL.format(wide="DECIMAL(38,0)"))
+    return spark.sql(
+        _LINREG_GROUP_SQL.format(wide="DECIMAL(38,0)", lineitem="{lineitem}"),
+        lineitem=load(spark, sf_dir, "lineitem"),
+    )
 
 
 @register(

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import register
-from ..tables import load, register_views
+from ..tables import load
 from .common import dist_running
 
 CAT = "olap"

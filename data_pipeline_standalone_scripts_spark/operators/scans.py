@@ -12,8 +12,11 @@ task, no driver funnel.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
 import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,16 +27,21 @@ from .common import dsum, o_dsum, tracked_persist, ts_str
 
 CAT = "scans"
 
-# Sink scratch space: inside the repo (driver sandbox: nothing outside
-# /root/repo may be written). Cleared and rewritten per call.
-SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".scratch")
+
+@functools.cache
+def _scratch_root() -> str:
+    # one directory per process: a frame built earlier reads its files
+    # lazily, so they must outlive every query of this process — remove
+    # them only when the interpreter exits (as session._ship_package)
+    root = tempfile.mkdtemp(prefix="spark-graft-scans-")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
 
 
 def _scratch_dir(name: str) -> str:
-    d = os.path.join(SCRATCH, name)
-    shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(os.path.dirname(d), exist_ok=True)
-    return d
+    """A fresh, empty directory for one build's sink: two builds of
+    the same query never share (or delete) each other's files."""
+    return tempfile.mkdtemp(prefix=name, dir=_scratch_root())
 
 
 @register(
@@ -322,7 +330,6 @@ def q_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     MT1-sized files, then all downstream reads are columnar.
     """
     out_dir = _scratch_dir("binaryfile_scan.dir")
-    os.makedirs(out_dir, exist_ok=True)
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
 
     def dump(rows):
@@ -513,14 +520,9 @@ def q_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1).alias("revised"),
         )
     )
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        urgent_fix.write.mode("overwrite").partitionBy(
-            "o_orderpriority"
-        ).parquet(out_dir)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    urgent_fix.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("o_orderpriority").parquet(out_dir)
     back = spark.read.parquet(out_dir)
     return (
         back.groupBy("o_orderpriority")

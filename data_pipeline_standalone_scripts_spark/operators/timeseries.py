@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import register
-from ..tables import load, register_views
+from ..tables import load
 from .common import dsum, o_dsum, o_ts_str, ts_str
 
 CAT = "timeseries"
@@ -222,7 +222,7 @@ _ROLLUP_SQL = """
                date_trunc('hour', ts) AS hour_b,
                date_trunc('day', ts) AS day_b,
                value
-        FROM events
+        FROM {events}
     )
     SELECT CASE WHEN GROUPING(minute_b) = 0 THEN 'minute'
                 WHEN GROUPING(hour_b) = 0 THEN 'hour'
@@ -238,7 +238,8 @@ _ROLLUP_SQL = """
 @register(
     "q_rollup_multires",
     oracle=_ROLLUP_SQL.format(
-        fmt="strftime(COALESCE(minute_b, hour_b, day_b), '%Y-%m-%d %H:%M:%S')"
+        fmt="strftime(COALESCE(minute_b, hour_b, day_b), '%Y-%m-%d %H:%M:%S')",
+        events="events",
     ),
     category=CAT,
 )
@@ -255,12 +256,13 @@ def q_rollup_multires(spark: SparkSession, sf_dir: str) -> DataFrame:
     size. One fact scan instead of three is the win once the scan is
     the cost (always true at 100 TB).
     """
-    register_views(spark, sf_dir, "events")
     return spark.sql(
         _ROLLUP_SQL.format(
             fmt="date_format(COALESCE(minute_b, hour_b, day_b), "
-            "'yyyy-MM-dd HH:mm:ss')"
-        )
+            "'yyyy-MM-dd HH:mm:ss')",
+            events="{events}",
+        ),
+        events=load(spark, sf_dir, "events"),
     )
 
 

@@ -172,12 +172,12 @@ def q_python_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load(spark, sf_dir, "documents")
     spark.udtf.register("tokenize_first5", Tokenize)
-    d.createOrReplaceTempView("_udtf_docs")
     return spark.sql(
         """
         SELECT doc_id, t.pos AS pos, t.token AS token
-        FROM _udtf_docs, LATERAL tokenize_first5(text) t
-        """
+        FROM {d}, LATERAL tokenize_first5(text) t
+        """,
+        d=d,
     ).select("doc_id", F.col("pos").cast("long").alias("pos"), "token")
 
 

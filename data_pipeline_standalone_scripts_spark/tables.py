@@ -1,4 +1,4 @@
-"""The ten test tables (FIXTURES.md) as DataFrames / temp views.
+"""The ten test tables (FIXTURES.md) as DataFrames.
 
 Loading is a plain columnar parquet scan — Spark's vectorized reader
 plus Catalyst column pruning / predicate pushdown make `load(...)` +
@@ -112,8 +112,3 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     _SCAN_CACHE[key] = df
     return df
 
-
-def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
-    """Register temp views (overwrite) for SQL-form queries."""
-    for t in names or TABLES:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)

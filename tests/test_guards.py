@@ -4,13 +4,25 @@ missing query vector, #2 q_dedup_eval zero-pair detector spine,
 
 Each test builds a tiny synthetic sf_dir under tmp_path so the guard
 path actually executes — the shipped fixtures never hit these edges.
+
+The session-state guards at the end check that building a query
+leaves the caller's session as it found it: no temp views, no
+session-conf writes, no files in the checkout, and no directory shared
+between two builds.
 """
 
 import os
+import re
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 
 import data_pipeline_standalone_scripts_spark as engine
+from data_pipeline_standalone_scripts_spark.oracle import (
+    check_query,
+    compare_frames,
+    run_oracle,
+)
 from data_pipeline_standalone_scripts_spark.registry import REGISTRY
 
 engine.load_all_operators()
@@ -151,3 +163,142 @@ def test_winnow_null_doc_id_names_column(spark, tmp_path):
     )
     with pytest.raises(Exception, match="NULL doc_id"):
         REGISTRY["q_fingerprint_winnow"].fn(spark, sf_dir).collect()
+
+
+# --- session state ----------------------------------------------------------
+
+PKG = os.path.dirname(os.path.abspath(engine.__file__))
+CHECKOUT = os.path.dirname(PKG)
+# the only session confs the query path reads: deployment settings
+# (finance.EVENTS_BUCKETED_TABLE_CONF, textclean.DP_SEED_CONF)
+DEPLOYMENT_CONF_KEYS = {"EVENTS_BUCKETED_TABLE_CONF", "DP_SEED_CONF"}
+
+
+def test_query_path_writes_no_session_state():
+    """Source guard over operators/ and functions/: no temp view is
+    registered, no session conf is set or unset, and conf reads are
+    limited to the two deployment keys."""
+    offenders = []
+    for sub in ("operators", "functions"):
+        for root, _dirs, files in os.walk(os.path.join(PKG, sub)):
+            for fname in sorted(f for f in files if f.endswith(".py")):
+                path = os.path.join(root, fname)
+                rel = os.path.relpath(path, PKG)
+                with open(path) as f:
+                    src = f.read()
+                for token in ("TempView(", "register_views", "conf.set(", "conf.unset("):
+                    if token in src:
+                        offenders.append((rel, token))
+                for key in re.findall(r"conf\.get\(\s*([^,)\s]+)", src):
+                    if key not in DEPLOYMENT_CONF_KEYS:
+                        offenders.append((rel, f"conf.get({key})"))
+    assert not offenders, offenders
+
+
+# every scans operator that writes a sink and reads it back while built
+SCANS_IO = [
+    "q_sink_roundtrip",
+    "q_csv_json_io",
+    "q_partitioned_prune",
+    "q_orc_io",
+    "q_xml_io",
+    "q_binaryfile_scan",
+    "q_text_io",
+    "q_schema_evolution",
+    "q_dynamic_overwrite",
+    "q_csv_corrupt_records",
+]
+
+
+def _checkout_paths() -> set[str]:
+    out = set()
+    for root, dirs, files in os.walk(CHECKOUT):
+        dirs[:] = [d for d in dirs if d not in (".git", "__pycache__", ".hypothesis")]
+        out.update(os.path.join(root, n) for n in dirs + files)
+    return out
+
+
+@pytest.mark.parametrize("name", SCANS_IO)
+def test_scans_io_builds_are_self_contained(name, spark, sf_small, monkeypatch):
+    """Build twice, then collect the FIRST frame: the second build must
+    not have replaced the files the first one reads. The two builds
+    write to different directories, none of them in the checkout."""
+    from data_pipeline_standalone_scripts_spark.operators import common, scans
+
+    real = scans._scratch_dir
+    written: list[list[str]] = []
+
+    def recording(label):
+        d = real(label)
+        written[-1].append(os.path.abspath(d))
+        return d
+
+    monkeypatch.setattr(scans, "_scratch_dir", recording)
+    before = _checkout_paths()
+    q = REGISTRY[name]
+    try:
+        frames = []
+        for _ in range(2):
+            written.append([])
+            frames.append(q.fn(spark, sf_small))
+        rep = compare_frames(name, frames[0].toPandas(), run_oracle(q.oracle, sf_small))
+    finally:
+        common.release_persists()
+    assert rep.ok, str(rep)
+    first, second = written
+    assert first and second and not set(first) & set(second), written
+    assert not [d for d in first + second if d.startswith(CHECKOUT + os.sep)]
+    assert _checkout_paths() == before
+
+
+# Disjoint SQL-form and fixture-writing queries, one thread each, over
+# different scale factors of the same table names. Queries that persist
+# (tracked_persist) are left out: the persist ledger is process-wide,
+# and one thread's release would drop the other's pin.
+SMALL_THREAD, MED_THREAD = (
+    [
+        "q_group_by_all",
+        "q_grouping_id",
+        "q_dq_report",
+        "q_linreg_fit",
+        "q_corr_subquery",
+        "q_sql_scripting",
+        "q_python_udtf",
+        "q_sink_roundtrip",
+        "q_dynamic_overwrite",
+        "q_orc_io",
+        "q_text_io",
+    ],
+    [
+        "q_pipe_sql",
+        "q_column_profile",
+        "q_join_lateral",
+        "q_bitmask_rollup",
+        "q_rollup_multires",
+        "q_agg_grouping_sets",
+        "q_linreg_per_group",
+        "q_sql_udf",
+        "q_csv_json_io",
+        "q_schema_evolution",
+        "q_xml_io",
+        "q_partitioned_prune",
+        "q_binaryfile_scan",
+    ],
+)
+
+
+def test_two_threads_one_session_match_oracle(spark, sf_small, sf_med):
+    """One session, two threads, each running its own queries through
+    registry.run (check_query): every result matches the oracle."""
+
+    def check_all(sf_dir, names):
+        return [check_query(n, spark, sf_dir) for n in names]
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futures = [
+            pool.submit(check_all, sf_small, SMALL_THREAD),
+            pool.submit(check_all, sf_med, MED_THREAD),
+        ]
+        reports = [rep for fut in futures for rep in fut.result()]
+    bad = [str(rep) for rep in reports if not rep.ok]
+    assert not bad, bad

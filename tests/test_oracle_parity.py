@@ -7,6 +7,7 @@ import pytest
 import data_pipeline_standalone_scripts_spark as engine
 from data_pipeline_standalone_scripts_spark.oracle import check_query
 from data_pipeline_standalone_scripts_spark.registry import REGISTRY
+from data_pipeline_standalone_scripts_spark.tables import TABLES
 
 engine.load_all_operators()
 
@@ -19,6 +20,12 @@ def _assert_parity(name, spark, sf_dir):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
         f"{name} left a cached plan behind"
     )
+    # SQL-form queries bind their tables per call: no temp view named
+    # after a fixture table is left in the caller's catalog (checked
+    # absolutely — replacing an existing view keeps the name set equal)
+    views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    leaked = views & {*TABLES, "_udtf_docs"}
+    assert not leaked, f"{name} left temp views {sorted(leaked)}"
 
 
 @pytest.mark.parametrize("name", sorted(REGISTRY))

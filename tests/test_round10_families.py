@@ -82,14 +82,11 @@ def test_minhash_containment_unknown_size_no_broadcast(spark, monkeypatch):
     assert "BroadcastHashJoin" not in plan
 
 
-def test_bpe_coalesce_guard_branches(spark):
+def test_bpe_coalesce_guard_branches(spark, monkeypatch):
     """q_bpe_merge's single-task tail (coalesce(1)) must drop out when
-    the bigram table exceeds the row cap — forced here via the conf —
-    with identical values either way."""
-    from data_pipeline_standalone_scripts_spark.operators.corpus import (
-        BPE_COALESCE_MAX_ROWS_CONF,
-        BPE_COUNT_PROBE_MIN_BYTES_CONF,
-    )
+    the bigram table exceeds the row cap — forced here via the module
+    constants — with identical values either way."""
+    from data_pipeline_standalone_scripts_spark.operators import corpus
 
     reg = REGISTRY["q_bpe_merge"]
     df_default = reg.fn(spark, SF)
@@ -97,15 +94,11 @@ def test_bpe_coalesce_guard_branches(spark):
     base = sorted(map(tuple, df_default.collect()))
     # force past BOTH guard levels: the zero-job corpus-bytes
     # short-circuit and the cached row-count cap
-    spark.conf.set(BPE_COUNT_PROBE_MIN_BYTES_CONF, "0")
-    spark.conf.set(BPE_COALESCE_MAX_ROWS_CONF, "0")
-    try:
-        df_big = reg.fn(spark, SF)
-        assert "Coalesce" not in _plan_of(df_big)
-        forced = sorted(map(tuple, df_big.collect()))
-    finally:
-        spark.conf.unset(BPE_COALESCE_MAX_ROWS_CONF)
-        spark.conf.unset(BPE_COUNT_PROBE_MIN_BYTES_CONF)
+    monkeypatch.setattr(corpus, "_BPE_COUNT_PROBE_MIN_BYTES", 0)
+    monkeypatch.setattr(corpus, "_BPE_COALESCE_MAX_ROWS", 0)
+    df_big = reg.fn(spark, SF)
+    assert "Coalesce" not in _plan_of(df_big)
+    forced = sorted(map(tuple, df_big.collect()))
     assert base == forced and len(base) > 0
 
 

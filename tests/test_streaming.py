@@ -15,12 +15,10 @@ from data_pipeline_standalone_scripts_spark.operators.events import (
 from data_pipeline_standalone_scripts_spark.streaming import jobs
 from data_pipeline_standalone_scripts_spark.tables import load
 
-SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")
-
 
 @pytest.fixture(scope="module")
-def staged(spark, sf_small):
-    out = os.path.join(SCRATCH, "staged_events")
+def staged(spark, sf_small, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("staged_events"))
     return jobs.stage_event_files(spark, sf_small, out, n_chunks=4)
 
 
@@ -180,7 +178,7 @@ def test_checkpoint_recovery_exactly_once(spark, sf_small, tmp_path):
     must never double-write a micro-batch into the lake.
     """
     staged = jobs.stage_event_files(
-        spark, sf_small, os.path.join(SCRATCH, "staged_ckpt"), n_chunks=4
+        spark, sf_small, str(tmp_path / "staged"), n_chunks=4
     )
     sink = str(tmp_path / "sink.parquet")
     ckpt = str(tmp_path / "ckpt")
