@@ -45,39 +45,53 @@ of re-spelling them:
 
 from __future__ import annotations
 
+import threading
+from collections.abc import Callable
+
 import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 DEC = "decimal(24,6)"
 
-# --- persist tracking (ADVICE r03 #1) ---------------------------------------
+# --- release ledger ---------------------------------------------------------
 # Operators persist() intermediates whose results are returned LAZILY,
 # so the operator itself can never unpersist (the cache is consumed
-# when the caller finally acts on the frame). Without a ledger those
-# blocks live for the whole session and accumulate across a
-# registry-wide sweep. Every operator-held persist or cache goes
-# through tracked_persist(). The ledger is drained after each query's
-# action by registry.run (every in-repo runner: oracle, tools, tests)
-# and by perfbench's own loop. spark.catalog.clearCache() also works —
-# draining is the targeted version that doesn't evict unrelated user
-# caches.
-_LIVE_PERSISTS: list[DataFrame] = []
+# when the caller finally acts on the frame); sink-writing scans
+# operators leave a directory the returned frame reads. Each build
+# registers how to release what it leaves: tracked_persist() the
+# unpersist, scans._scratch_dir() the removal of its directory. The
+# ledger is PER THREAD, so one thread's release never drops the pins
+# or files of a frame another thread has built and not yet acted on.
+# Every in-repo runner builds, acts and releases in one thread:
+# registry.run (oracle, tools, tests) after each query's action,
+# perfbench's own loop, and the test suite after each test.
+_LEDGER = threading.local()
+
+
+def on_release(callback: Callable[[], object]) -> None:
+    """Register ``callback`` to run at the calling thread's next
+    :func:`release_persists`."""
+    if not hasattr(_LEDGER, "callbacks"):
+        _LEDGER.callbacks = []
+    _LEDGER.callbacks.append(callback)
 
 
 def tracked_persist(df: DataFrame, level=None) -> DataFrame:
-    """persist() + register in the module ledger for later release."""
+    """persist() + register its unpersist in this thread's ledger."""
     out = df.persist(level) if level is not None else df.persist()
-    _LIVE_PERSISTS.append(out)
+    on_release(out.unpersist)
     return out
 
 
 def release_persists() -> int:
-    """Unpersist every ledgered frame (blocking=False); returns count."""
-    n = len(_LIVE_PERSISTS)
-    while _LIVE_PERSISTS:
+    """Run this thread's release callbacks newest-first (unpersists
+    are blocking=False); returns how many ran."""
+    callbacks = getattr(_LEDGER, "callbacks", [])
+    n = len(callbacks)
+    while callbacks:
         try:
-            _LIVE_PERSISTS.pop().unpersist()
+            callbacks.pop()()
         except Exception:  # noqa: BLE001 — session may already be gone
             pass
     return n
@@ -333,7 +347,12 @@ def _range_pinned(df, keys, parts: int, pid: str):
     # no exchange is reused, and each RangePartitioner samples its own
     # bounds. The same row then gets different pids per branch -> wrong
     # offsets (none of the exchanges sits under an AQE coalesced read).
-    # The persist makes every branch read ONE materialization.
+    # The persist makes every branch read ONE materialization. The
+    # calling thread's ledger holds it until that thread releases, so
+    # other threads' runs cannot drop it. Two hazards remain: a
+    # spark.catalog.clearCache() between build and action, and two
+    # live builds of the identical plan (the CacheManager keys entries
+    # by plan, so both share one entry and the first release drops it).
     return tracked_persist(
         df.repartitionByRange(parts, *keys).withColumn(pid, F.spark_partition_id())
     )

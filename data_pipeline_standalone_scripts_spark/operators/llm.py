@@ -918,8 +918,9 @@ def q_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOTE — eager build (ADVICE r06): constructing this DataFrame runs
     a job. The 1-row corpus-stats collect below materializes the
     persisted kernel output at BUILD time (deliberate, the r4
-    broadcast-race lesson), so plan-only consumers (dump_plans,
-    EXPLAIN tests) trigger a full corpus tokenization pass.
+    broadcast-race lesson), so plan-only consumers (``run_query
+    --explain``, EXPLAIN tests) trigger a full corpus tokenization
+    pass.
     """
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     qterms = sorted(BM25_QUERY)

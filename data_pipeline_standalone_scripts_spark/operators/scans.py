@@ -23,16 +23,16 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..tables import load
-from .common import dsum, o_dsum, tracked_persist, ts_str
+from .common import dsum, o_dsum, on_release, tracked_persist, ts_str
 
 CAT = "scans"
 
 
 @functools.cache
 def _scratch_root() -> str:
-    # one directory per process: a frame built earlier reads its files
-    # lazily, so they must outlive every query of this process — remove
-    # them only when the interpreter exits (as session._ship_package)
+    # one root per process, removed when the interpreter exits: the
+    # backstop for builds whose caller never releases them
+    # (as session._ship_package)
     root = tempfile.mkdtemp(prefix="spark-graft-scans-")
     atexit.register(shutil.rmtree, root, ignore_errors=True)
     return root
@@ -40,8 +40,12 @@ def _scratch_root() -> str:
 
 def _scratch_dir(name: str) -> str:
     """A fresh, empty directory for one build's sink: two builds of
-    the same query never share (or delete) each other's files."""
-    return tempfile.mkdtemp(prefix=name, dir=_scratch_root())
+    the same query never share (or delete) each other's files. The
+    frame built over it reads it lazily, so it is removed at the
+    building thread's next release_persists(), with the persists."""
+    out = tempfile.mkdtemp(prefix=name, dir=_scratch_root())
+    on_release(functools.partial(shutil.rmtree, out, ignore_errors=True))
+    return out
 
 
 @register(

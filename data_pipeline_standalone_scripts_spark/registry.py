@@ -80,8 +80,9 @@ def run(
     action: Callable[[DataFrame], object] = methodcaller("toPandas"),
 ):
     """Build query ``name``, apply ``action`` to it once and return
-    what it returned. The persists its operators took are released
-    afterwards, also when building or acting fails.
+    what it returned. What its build left (operator persists, sink
+    directories) is released afterwards, also when building or acting
+    fails.
 
     The default is a ``methodcaller``, not ``DataFrame.toPandas``: on
     Spark 4 that attribute is the abstract parent's stub, which

@@ -53,6 +53,8 @@ this same shape — opaque pixel payload + typed metadata record.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1370,24 +1372,23 @@ def hexcam_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.mapInPandas(gen, schema="media_id bigint, payload binary")
 
 
-_HEX_GEO_TABLES: dict[int, tuple] = {}
-
-
+@functools.cache
 def hex_geometry_tables() -> dict[int, tuple]:
     """{R: (nb, qs, rs, order_key)} for every camera size the fixture
     family ships (HEXCAM_R_RANGE) — built once per process and shared
     by all hex ops, which sc.broadcast it as their adjacency/geometry
-    table. order_key = (r+R)*4096 + (q+R): the deterministic (r, q)
-    tie-break every hex op uses (matches the oracles' first_px)."""
+    table (read-only). order_key = (r+R)*4096 + (q+R): the
+    deterministic (r, q) tie-break every hex op uses (matches the
+    oracles' first_px)."""
     import numpy as np
 
-    if not _HEX_GEO_TABLES:
-        for R in HEXCAM_R_RANGE:
-            pts, nb = hex_geometry(R)
-            qr = np.array(pts, dtype=np.int64)
-            key = (qr[:, 1] + R) * 4096 + (qr[:, 0] + R)
-            _HEX_GEO_TABLES[R] = (nb, qr[:, 0], qr[:, 1], key)
-    return _HEX_GEO_TABLES
+    tables = {}
+    for R in HEXCAM_R_RANGE:
+        pts, nb = hex_geometry(R)
+        qr = np.array(pts, dtype=np.int64)
+        key = (qr[:, 1] + R) * 4096 + (qr[:, 0] + R)
+        tables[R] = (nb, qr[:, 0], qr[:, 1], key)
+    return tables
 
 
 def hexcam_parse(payload: bytes):

@@ -7,12 +7,14 @@ path actually executes — the shipped fixtures never hit these edges.
 
 The session-state guards at the end check that building a query
 leaves the caller's session as it found it: no temp views, no
-session-conf writes, no files in the checkout, and no directory shared
-between two builds.
+session-conf writes, no files in the checkout, no directory shared
+between two builds, and no release reaching another thread's build.
 """
 
 import os
 import re
+import sys
+import threading
 from concurrent.futures import ThreadPoolExecutor
 
 import pytest
@@ -23,7 +25,8 @@ from data_pipeline_standalone_scripts_spark.oracle import (
     compare_frames,
     run_oracle,
 )
-from data_pipeline_standalone_scripts_spark.registry import REGISTRY
+from data_pipeline_standalone_scripts_spark.operators import common
+from data_pipeline_standalone_scripts_spark.registry import REGISTRY, run
 
 engine.load_all_operators()
 
@@ -174,24 +177,51 @@ CHECKOUT = os.path.dirname(PKG)
 DEPLOYMENT_CONF_KEYS = {"EVENTS_BUCKETED_TABLE_CONF", "DP_SEED_CONF"}
 
 
+def _sources(*subs):
+    """(path relative to the package, text) of every module under
+    the package subdirectories ``subs``."""
+    for sub in subs:
+        for root, _dirs, files in os.walk(os.path.join(PKG, sub)):
+            for fname in sorted(f for f in files if f.endswith(".py")):
+                path = os.path.join(root, fname)
+                with open(path) as f:
+                    yield os.path.relpath(path, PKG), f.read()
+
+
 def test_query_path_writes_no_session_state():
     """Source guard over operators/ and functions/: no temp view is
     registered, no session conf is set or unset, and conf reads are
     limited to the two deployment keys."""
     offenders = []
-    for sub in ("operators", "functions"):
-        for root, _dirs, files in os.walk(os.path.join(PKG, sub)):
-            for fname in sorted(f for f in files if f.endswith(".py")):
-                path = os.path.join(root, fname)
-                rel = os.path.relpath(path, PKG)
-                with open(path) as f:
-                    src = f.read()
-                for token in ("TempView(", "register_views", "conf.set(", "conf.unset("):
-                    if token in src:
-                        offenders.append((rel, token))
-                for key in re.findall(r"conf\.get\(\s*([^,)\s]+)", src):
-                    if key not in DEPLOYMENT_CONF_KEYS:
-                        offenders.append((rel, f"conf.get({key})"))
+    for rel, src in _sources("operators", "functions"):
+        for token in ("TempView(", "register_views", "conf.set(", "conf.unset("):
+            if token in src:
+                offenders.append((rel, token))
+        for key in re.findall(r"conf\.get\(\s*([^,)\s]+)", src):
+            if key not in DEPLOYMENT_CONF_KEYS:
+                offenders.append((rel, f"conf.get({key})"))
+    assert not offenders, offenders
+
+
+MODULE_CONTAINER = re.compile(
+    r"^[A-Za-z_]\w*(\s*:[^=\n]+)?\s*=\s*(\[\]|\{\}|set\(\))", re.M
+)
+
+
+def test_query_path_holds_no_module_state():
+    """Source guard over operators/, functions/ and sources/: no
+    module-level mutable container (``= []``, ``= {}``, ``= set()``),
+    so no query's result depends on what ran before it in the process
+    or in another thread. What a build leaves goes to the calling
+    thread's ledger (common.on_release); a fill-once table is a
+    functools.cache'd function. The one deliberate process-wide cache
+    on the query path is ``tables._SCAN_CACHE``, outside these
+    directories: it holds immutable scan handles."""
+    offenders = [
+        (rel, m.group(0))
+        for rel, src in _sources("operators", "functions", "sources")
+        for m in MODULE_CONTAINER.finditer(src)
+    ]
     assert not offenders, offenders
 
 
@@ -222,8 +252,9 @@ def _checkout_paths() -> set[str]:
 def test_scans_io_builds_are_self_contained(name, spark, sf_small, monkeypatch):
     """Build twice, then collect the FIRST frame: the second build must
     not have replaced the files the first one reads. The two builds
-    write to different directories, none of them in the checkout."""
-    from data_pipeline_standalone_scripts_spark.operators import common, scans
+    write to different directories, none of them in the checkout, and
+    releasing the builds removes them."""
+    from data_pipeline_standalone_scripts_spark.operators import scans
 
     real = scans._scratch_dir
     written: list[list[str]] = []
@@ -249,12 +280,16 @@ def test_scans_io_builds_are_self_contained(name, spark, sf_small, monkeypatch):
     assert first and second and not set(first) & set(second), written
     assert not [d for d in first + second if d.startswith(CHECKOUT + os.sep)]
     assert _checkout_paths() == before
+    assert not [d for d in first + second if os.path.exists(d)]
 
 
-# Disjoint SQL-form and fixture-writing queries, one thread each, over
-# different scale factors of the same table names. Queries that persist
-# (tracked_persist) are left out: the persist ledger is process-wide,
-# and one thread's release would drop the other's pin.
+# Disjoint SQL-form, fixture-writing and persisting queries, one thread
+# each, over different scale factors of the same table names. Each
+# thread has range-rank callers (dist_running / dist_ntile, whose
+# persist is correctness) and another tracked_persist query. The
+# queries differ per thread, and so do the scale factors, because the
+# CacheManager keys entries by plan: two live builds of one identical
+# plan would share one entry.
 SMALL_THREAD, MED_THREAD = (
     [
         "q_group_by_all",
@@ -268,6 +303,9 @@ SMALL_THREAD, MED_THREAD = (
         "q_dynamic_overwrite",
         "q_orc_io",
         "q_text_io",
+        "q_win_ntile_pct",
+        "q_gini_revenue",
+        "q_bloom_prefilter",
     ],
     [
         "q_pipe_sql",
@@ -283,6 +321,9 @@ SMALL_THREAD, MED_THREAD = (
         "q_xml_io",
         "q_partitioned_prune",
         "q_binaryfile_scan",
+        "q_late_data_watermark",
+        "q_pareto_skyline",
+        "q_csv_corrupt_records",
     ],
 )
 
@@ -302,3 +343,65 @@ def test_two_threads_one_session_match_oracle(spark, sf_small, sf_med):
         reports = [rep for fut in futures for rep in fut.result()]
     bad = [str(rep) for rep in reports if not rep.ok]
     assert not bad, bad
+
+
+def test_other_threads_run_leaves_a_built_frame_alone(spark, sf_small, sf_med):
+    """Thread A builds a range-rank query and waits; thread B runs
+    another query through registry.run to completion (which releases
+    B's ledger); then A acts on its frame. A's range-rank pin must
+    still be in place, so A's result matches the oracle."""
+    name = "q_late_data_watermark"
+    built, b_done = threading.Event(), threading.Event()
+
+    def thread_a():
+        try:
+            df = REGISTRY[name].fn(spark, sf_med)
+            built.set()
+            assert b_done.wait(600)
+            return df.toPandas()
+        finally:
+            built.set()
+            common.release_persists()
+
+    def thread_b():
+        try:
+            assert built.wait(600)
+            run("q_agg_pricing_summary", spark, sf_small)
+        finally:
+            b_done.set()
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        fut_a, fut_b = pool.submit(thread_a), pool.submit(thread_b)
+        fut_b.result()
+        got = fut_a.result()
+    rep = compare_frames(name, got, run_oracle(REGISTRY[name].oracle, sf_med))
+    assert rep.ok, str(rep)
+
+
+def test_release_ledger_is_per_thread():
+    """More threads than cores register release callbacks under a short
+    switch interval, then each releases: every release runs exactly
+    its own thread's callbacks, newest first, and counts them."""
+    n_threads, n_callbacks = 8, 200
+    start = threading.Barrier(n_threads)
+    ran: dict[int, list] = {i: [] for i in range(n_threads)}
+
+    def worker(i):
+        start.wait(60)
+        for k in range(n_callbacks):
+            common.on_release(
+                lambda k=k: ran[i].append((k, threading.get_ident()))
+            )
+        return threading.get_ident(), common.release_persists()
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=n_threads) as pool:
+            results = [f.result(timeout=60) for f in
+                       [pool.submit(worker, i) for i in range(n_threads)]]
+    finally:
+        sys.setswitchinterval(old)
+    for i, (ident, n) in enumerate(results):
+        assert n == n_callbacks
+        assert ran[i] == [(k, ident) for k in reversed(range(n_callbacks))]
