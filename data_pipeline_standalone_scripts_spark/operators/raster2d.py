@@ -31,22 +31,43 @@ outputs are pure integer counts and sums. The only rounded quantity
 in the module is the final mean/ratio division of two already-equal
 numbers.
 
-Scale: all three kernels are stateless Arrow-batched mapInPandas
-stages over the FITS generator (at 100 TB: over a binaryFile scan of
-real .fits objects) — zero shuffles, per-image numpy; the per-image
-union-find in q_connected_2d touches ~2 runs × h rows, not pixels².
+One kernel per rule serves both camera geometries. A camera is its
+table scan, its payload parser and a cached geometry table
+(sources/multimodal.rect_geometry for the square FITS grid,
+hex_geometry_tables for the hex cameras): tailcut_masks, the
+connected_components labelling and kept_moments run over the
+geometry's index-mapped neighbor tables and integer pixel
+coordinates, so the square and hex registrations of a stage differ
+only in the camera they pass and their output column names.
+
+Scale: every kernel is a stateless Arrow-batched mapInPandas stage
+over the camera scan (at 100 TB: over a binaryFile scan of real
+.fits objects) — zero shuffles, per-image numpy over O(pixels)
+gathers; workers build each geometry table once per process, and no
+build broadcasts or writes anything.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..sources.multimodal import (
+    HEX_MQ,
+    HEX_MR,
+    fits_parse,
+    fits_table,
+    hex_geometry_tables,
+    hexcam_parse,
+    hexcam_table,
+    rect_geometry,
+)
 
 CAT = "raster2d"
 
@@ -95,17 +116,340 @@ def _nb8_core_sql() -> str:
     return "(" + " OR ".join(terms) + ")"
 
 
-def _shift2d(m, dy: int, dx: int):
-    """m shifted so out[y, x] = m[y+dy, x+dx], False/0 out of bounds."""
+# --- one kernel per rule, for every camera -----------------------------------
+#
+# A geometry is the tuple rect_geometry / hex_geometry_tables return:
+# (tail_nb, conn_nb, c1, c2, order_key) — index-mapped neighbor tables
+# (-1 = no neighbor) for the tailcut rescue and for island labelling,
+# the two integer pixel coordinates (x, y on the square grid; axial
+# q, r on hex) and the per-pixel first-pixel tie-break key.
+
+
+def tailcut_masks(v, nb, hi: int, lo: int):
+    """(core, rescued) boolean masks of the two-threshold rescue rule:
+    core = v >= hi; rescued = v >= lo, not core, and some neighbor in
+    ``nb`` (an (npix, k) index table, -1 for absent) is core. THE
+    single copy of the kept-set semantics every camera op builds on, so
+    a rule change cannot desync the fused pipelines from their stages.
+
+    Neighbor tables are symmetric, so a pixel touches a core pixel iff
+    it is listed in a core pixel's row: the core rows are scattered
+    into a flag vector (a -1 entry lands in its spare last slot) —
+    ~10x faster than gathering every pixel's row and reducing it."""
     import numpy as np
 
-    h, w = m.shape
-    out = np.zeros_like(m)
-    ys0, ys1 = max(0, -dy), min(h, h - dy)
-    xs0, xs1 = max(0, -dx), min(w, w - dx)
-    if ys0 < ys1 and xs0 < xs1:
-        out[ys0:ys1, xs0:xs1] = m[ys0 + dy : ys1 + dy, xs0 + dx : xs1 + dx]
-    return out
+    core = v >= hi
+    touched = np.zeros(len(v) + 1, bool)
+    touched[nb[core]] = True
+    return core, (v >= lo) & ~core & touched[:-1]
+
+
+def connected_components(v, nb, thresh: int, order_key):
+    """Islands of the pixels with v >= ``thresh`` joined over ``nb``
+    (an (npix, k) index table, -1 for absent): returns (n_islands,
+    n_isolated, n_above, kept_size, kept_sum) for the island with the
+    largest total signal (ties: smallest ``order_key``), or None when
+    no pixel passes.
+
+    Node-only labelling: each above-threshold node starts as its own
+    label; every round takes the minimum label over the node and its
+    above-threshold neighbors, hooks each old label's node to that
+    minimum, then pointer-jumps to a fixed point. A label is always a
+    node of the same island and never grows, so the fixed point labels
+    every island by its smallest node. Sizes, signals and first pixels
+    then reduce per label with bincount / minimum.at (signals are
+    integers < 2^24, exact in bincount's float64)."""
+    import numpy as np
+
+    nodes = np.flatnonzero(v >= thresh)
+    n = len(nodes)
+    if n == 0:
+        return None
+    # node-local neighbor ids; n = below threshold or absent (the -1
+    # entries index the spare last slot)
+    pos = np.full(len(v) + 1, n, np.int64)
+    pos[nodes] = np.arange(n)
+    nbn = pos[nb[nodes]]
+    lab = np.arange(n)
+    ext = np.full(n + 1, n, np.int64)
+    while True:
+        ext[:n] = lab
+        new = np.minimum(lab, ext[nbn].min(axis=1))
+        np.minimum.at(new, lab, new.copy())
+        jumped = new[new]
+        while not np.array_equal(jumped, new):
+            new, jumped = jumped, jumped[jumped]
+        if np.array_equal(new, lab):
+            break
+        lab = new
+    _, comp = np.unique(lab, return_inverse=True)
+    size = np.bincount(comp)
+    sig = np.bincount(comp, weights=v[nodes]).astype(np.int64)
+    first = np.full(len(size), np.iinfo(np.int64).max)
+    np.minimum.at(first, comp, order_key[nodes])
+    best = np.lexsort((first, -sig))[0]
+    return (
+        len(size),
+        int((size == 1).sum()),
+        n,
+        int(size[best]),
+        int(sig[best]),
+    )
+
+
+def kept_moments(kv, c1, c2) -> list[int]:
+    """Exact integer signal moments [S0, S1, S2, S11, S22, S12] of the
+    kept-pixel weights ``kv`` (0 where dropped) over the integer pixel
+    coordinates c1, c2 — (x, y) on the square grid, axial (q, r) on
+    hex. Every product takes the int64 weights first, so narrow
+    coordinate dtypes cannot wrap."""
+    s1, s2 = c1 * kv, c2 * kv
+    return [
+        int(kv.sum()),
+        int(s1.sum()),
+        int(s2.sum()),
+        int((c1 * s1).sum()),
+        int((c2 * s2).sum()),
+        int((c1 * s2).sum()),
+    ]
+
+
+def _square_pixels(payload: bytes):
+    """(flat int64 pixel values, geometry) of one FITS raster, pixels
+    row-major (y*w + x)."""
+    import numpy as np
+
+    _, phys = fits_parse(payload)
+    h, w = phys.shape
+    return phys.astype(np.int64).ravel(), rect_geometry(w, h)
+
+
+def _hex_pixels(payload: bytes):
+    """(pixel values in (r, q) order, geometry) of one HEX1 image."""
+    R, v = hexcam_parse(payload)
+    return v, hex_geometry_tables()[R]
+
+
+def _square_cartesian(s1, s2, s11, s22, s12):
+    """Square-grid moments are cartesian already: (Sx, Sy, Sxx, Syy,
+    Sxy)."""
+    return s1, s2, s11, s22, s12
+
+
+def _hex_cartesian(sq, sr, sqq, srr, sqr):
+    """Axial → cartesian change of basis of the moment sums (x = q +
+    r/2, y = (√3/2)·r at unit pitch): Sx = Sq + Sr/2, Sy = (√3/2)Sr,
+    Sxx = Sqq + Sqr + Srr/4, Syy = ¾Srr, Sxy = (√3/2)(Sqr + Srr/2) —
+    term for term the oracles' _hex_ellipse_sql."""
+    half_r3 = F.sqrt(F.lit(3.0)) / 2
+    return (
+        sq + sr / 2,
+        half_r3 * sr,
+        sqq + sqr + srr / 4,
+        F.lit(0.75) * srr,
+        half_r3 * (sqr + srr / 2),
+    )
+
+
+class _Camera(NamedTuple):
+    table: Callable  # (spark, sf_dir) -> (media_id, payload) frame
+    pixels: Callable  # payload -> (flat pixel values, geometry)
+    cartesian: Callable  # double moment Columns -> cartesian (Sx…Sxy)
+
+
+SQUARE = _Camera(fits_table, _square_pixels, _square_cartesian)
+HEX = _Camera(hexcam_table, _hex_pixels, _hex_cartesian)
+
+
+def _tailcut(
+    spark: SparkSession, sf_dir: str, camera: _Camera, n_pix: str | None
+) -> DataFrame:
+    """Per image: core, rescued and kept counts, kept sum and mean of
+    the tailcut rule on ``camera``; ``n_pix`` names the pixel-count
+    column (None: not reported)."""
+    pixels = camera.pixels
+    cols = ("media_id", "n_pix", "n_core", "n_rescued", "kept_sum")
+
+    def clean(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = {k: [] for k in cols}
+            for mid, p in zip(pdf["media_id"], pdf["payload"]):
+                v, (tail_nb, *_) = pixels(bytes(p))
+                core, rescued = tailcut_masks(v, tail_nb, TAIL2D_HI, TAIL2D_LO)
+                rows["media_id"].append(mid)
+                rows["n_pix"].append(len(v))
+                rows["n_core"].append(int(core.sum()))
+                rows["n_rescued"].append(int(rescued.sum()))
+                rows["kept_sum"].append(int(v[core | rescued].sum()))
+            yield pd.DataFrame(rows, columns=list(cols))
+
+    out = camera.table(spark, sf_dir).mapInPandas(
+        clean,
+        schema="media_id bigint, n_pix bigint, n_core bigint, "
+        "n_rescued bigint, kept_sum bigint",
+    )
+    n_kept = F.col("n_core") + F.col("n_rescued")
+    return out.select(
+        "media_id",
+        *([F.col("n_pix").alias(n_pix)] if n_pix else []),
+        "n_core",
+        "n_rescued",
+        n_kept.alias("n_kept"),
+        "kept_sum",
+        F.round(
+            F.col("kept_sum").cast("double")
+            / F.when(n_kept > 0, n_kept).otherwise(F.lit(None)),
+            6,
+        ).alias("kept_mean"),
+    )
+
+
+def _connected(spark: SparkSession, sf_dir: str, camera: _Camera) -> DataFrame:
+    """Per image with any pixel above CC2D_T: island and isolated-pixel
+    counts, and the size and signal of the largest-signal island, over
+    ``camera``'s connectivity table."""
+    pixels = camera.pixels
+    cols = (
+        "media_id", "n_islands", "n_isolated", "n_above", "kept_size",
+        "kept_sum",
+    )
+
+    def clean(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = {k: [] for k in cols}
+            for mid, p in zip(pdf["media_id"], pdf["payload"]):
+                v, (_, conn_nb, _, _, key) = pixels(bytes(p))
+                got = connected_components(v, conn_nb, CC2D_T, key)
+                if got is None:
+                    continue
+                rows["media_id"].append(mid)
+                for c, val in zip(cols[1:], got):
+                    rows[c].append(val)
+            yield pd.DataFrame(rows, columns=list(cols))
+
+    return camera.table(spark, sf_dir).mapInPandas(
+        clean,
+        schema="media_id bigint, n_islands bigint, n_isolated bigint, "
+        "n_above bigint, kept_size bigint, kept_sum bigint",
+    )
+
+
+_SUM_COLS = ("s1", "s2", "s11", "s22", "s12")
+
+
+def _moment_sums(spark: SparkSession, sf_dir: str, camera: _Camera) -> DataFrame:
+    """The fused clean→moments→energy kernel both Hillas ops and both
+    pipelines read: one row per image with at least 3 kept pixels —
+    media_id, n_pix, e_in (Σv²), n_core, n_rescued, the kept_moments
+    s0, s1, s2, s11, s22, s12 and e_kept (Σ kept v²), all exact
+    integers, reduced inside the Arrow kernel."""
+    import numpy as np
+
+    pixels = camera.pixels
+    cols = (
+        "media_id", "n_pix", "e_in", "n_core", "n_rescued", "s0",
+        *_SUM_COLS, "e_kept",
+    )
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for mid, p in zip(pdf["media_id"], pdf["payload"]):
+                v, (tail_nb, _, c1, c2, _) = pixels(bytes(p))
+                core, rescued = tailcut_masks(v, tail_nb, TAIL2D_HI, TAIL2D_LO)
+                kept = core | rescued
+                if int(kept.sum()) < 3:
+                    continue
+                kv = np.where(kept, v, 0)
+                rows.append(
+                    [mid, len(v), int((v * v).sum()), int(core.sum()),
+                     int(rescued.sum()), *kept_moments(kv, c1, c2),
+                     int((kv * kv).sum())]
+                )
+            yield pd.DataFrame(rows, columns=list(cols), dtype="int64")
+
+    return camera.table(spark, sf_dir).mapInPandas(
+        kernel, schema=", ".join(f"{c} bigint" for c in cols)
+    )
+
+
+def _ellipse(s0d: Column, sx, sy, sxx, syy, sxy) -> list[Column]:
+    """Hillas ellipse from the weight sum and the CARTESIAN moment
+    sums (double Columns): centre of gravity, then the covariance
+    eigen-decomposition — length (major-axis RMS), width (minor, its
+    tiny-negative float eigenvalue guarded with GREATEST(·, 0)) and
+    psi = atan2(2·vxy, vxx−vyy)/2, each rounded to 6 decimals. The one
+    Spark-side copy of the tree the oracles spell in SQL."""
+    cx = sx / s0d
+    cy = sy / s0d
+    vxx = sxx / s0d - cx * cx
+    vyy = syy / s0d - cy * cy
+    vxy = sxy / s0d - cx * cy
+    rr = F.sqrt((vxx - vyy) * (vxx - vyy) + 4 * vxy * vxy)
+    return [
+        F.round(cx, 6).alias("cog_x"),
+        F.round(cy, 6).alias("cog_y"),
+        F.round(F.sqrt((vxx + vyy + rr) / 2), 6).alias("length"),
+        F.round(F.sqrt(F.greatest((vxx + vyy - rr) / 2, F.lit(0.0))), 6).alias(
+            "width"
+        ),
+        F.round(F.atan2(2 * vxy, vxx - vyy) / 2, 6).alias("psi"),
+    ]
+
+
+def _camera_ellipse(camera: _Camera) -> list[Column]:
+    """_ellipse over a _moment_sums frame of ``camera``."""
+    s = [F.col(c).cast("double") for c in _SUM_COLS]
+    return _ellipse(F.col("s0").cast("double"), *camera.cartesian(*s))
+
+
+def _hillas(spark: SparkSession, sf_dir: str, camera: _Camera) -> DataFrame:
+    """Hillas ellipse of each tailcut-cleaned image on ``camera``."""
+    return _moment_sums(spark, sf_dir, camera).select(
+        "media_id",
+        (F.col("n_core") + F.col("n_rescued")).alias("n_kept"),
+        F.col("s0").alias("size"),
+        *_camera_ellipse(camera),
+    )
+
+
+def _pipeline(
+    spark: SparkSession, sf_dir: str, camera: _Camera, n_pix: str
+) -> DataFrame:
+    """The fused load → clean → Hillas → assess → JSON-score pass on
+    ``camera``; ``n_pix`` names the pixel-count column."""
+    n_kept = F.col("n_core") + F.col("n_rescued")
+    dropped = (F.col("e_in") - F.col("e_kept")).cast("double")
+    mse_micro = F.round(dropped * 1_000_000 / F.col("n_pix")).cast("long")
+    energy_ppm = F.round(
+        F.col("e_kept").cast("double") * 1_000_000 / F.col("e_in")
+    ).cast("long")
+    return _moment_sums(spark, sf_dir, camera).select(
+        "media_id",
+        F.col("n_pix").alias(n_pix),
+        "n_core",
+        "n_rescued",
+        n_kept.alias("n_kept"),
+        F.col("s0").alias("size"),
+        *_camera_ellipse(camera),
+        F.round(dropped / F.col("n_pix"), 6).alias("mse"),
+        F.round(F.col("e_kept").cast("double") / F.col("e_in"), 6).alias(
+            "energy_ratio"
+        ),
+        F.concat(
+            F.lit('{"media_id":'),
+            F.col("media_id").cast("string"),
+            F.lit(',"n_kept":'),
+            n_kept.cast("string"),
+            F.lit(',"size":'),
+            F.col("s0").cast("string"),
+            F.lit(',"mse_micro":'),
+            mse_micro.cast("string"),
+            F.lit(',"energy_ppm":'),
+            energy_ppm.cast("string"),
+            F.lit("}"),
+        ).alias("score_json"),
+    )
 
 
 @register(
@@ -154,90 +498,17 @@ def q_tailcut_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-exact (the mean divides two already-identical numbers).
 
     Scale: stateless Arrow-batched mapInPandas over the FITS scan,
-    zero shuffles; the 8 shifted-mask ORs are O(pixels) per image.
+    zero shuffles; tailcut_masks gathers the 8-neighbor table of
+    rect_geometry(w, h) — O(pixels) per image.
     """
-    import numpy as np
-
-    from ..sources.multimodal import fits_parse, fits_table
-
-    def clean(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("media_id", "n_core", "n_rescued", "kept_sum")}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                _, phys = fits_parse(bytes(p))
-                v = phys.astype(np.int64)
-                core = v >= TAIL2D_HI
-                boundary = v >= TAIL2D_LO
-                nb_core = np.zeros_like(core)
-                for dy in (-1, 0, 1):
-                    for dx in (-1, 0, 1):
-                        if dx == 0 and dy == 0:
-                            continue
-                        nb_core |= _shift2d(core, dy, dx)
-                rescued = boundary & ~core & nb_core
-                kept = core | rescued
-                rows["media_id"].append(mid)
-                rows["n_core"].append(int(core.sum()))
-                rows["n_rescued"].append(int(rescued.sum()))
-                rows["kept_sum"].append(int(v[kept].sum()))
-            yield pd.DataFrame(rows)
-
-    out = fits_table(spark, sf_dir).mapInPandas(
-        clean,
-        schema="media_id bigint, n_core bigint, n_rescued bigint, kept_sum bigint",
-    )
-    n_kept = F.col("n_core") + F.col("n_rescued")
-    return out.select(
-        "media_id",
-        "n_core",
-        "n_rescued",
-        n_kept.alias("n_kept"),
-        "kept_sum",
-        F.round(
-            F.col("kept_sum").cast("double")
-            / F.when(n_kept > 0, n_kept).otherwise(F.lit(None)),
-            6,
-        ).alias("kept_mean"),
-    )
-
-
-def tailcut_masks(v, nb_idx, hi: int, lo: int):
-    """(core, rescued) boolean masks of the two-threshold rescue rule
-    over an INDEX-MAPPED neighbor list — THE single copy of the
-    kept-set semantics every hex op builds on (r11 review #3: the
-    tailcut/hillas/pipeline kernels must share one implementation so
-    a rule change cannot desync the fused op from its stages)."""
-    import numpy as np
-
-    core = v >= hi
-    nbc = np.zeros(v.shape[0], dtype=bool)
-    for k in range(nb_idx.shape[1]):
-        idx = nb_idx[:, k]
-        valid = idx >= 0
-        nbc[valid] |= core[idx[valid]]
-    rescued = (v >= lo) & ~core & nbc
-    return core, rescued
-
-
-def tailcut_adjacency(v, nb_idx, hi: int, lo: int):
-    """Tailcut over an INDEX-MAPPED neighbor list: v is the flat pixel
-    vector in pix_id order, nb_idx an (npix, k) adjacency table with
-    -1 for absent neighbors. Returns (n_core, n_rescued, kept_sum).
-    Geometry-agnostic — the hex camera feeds its 6-neighbor table,
-    and a degenerate 8-neighbor rectangular table reproduces X58's
-    array-shift kernel exactly (pytest pins the equivalence)."""
-    core, rescued = tailcut_masks(v, nb_idx, hi, lo)
-    kept = core | rescued
-    return int(core.sum()), int(rescued.sum()), int(v[kept].sum())
+    return _tailcut(spark, sf_dir, SQUARE, n_pix=None)
 
 
 _HEX_DIRS = ((1, 0), (-1, 0), (0, 1), (0, -1), (1, -1), (-1, 1))
-# Hex pixel-value multipliers are defined in sources/multimodal.py —
-# NEXT TO THE PAYLOAD WRITER — and imported here, so the four hex
-# oracles below and the writer can never drift (r11 review #1; the
-# modulus-wrap sizing argument lives with the definition). Re-exported
-# under the same names for the tests and SURVEY references.
-from ..sources.multimodal import HEX_MQ, HEX_MR  # noqa: E402
+# The hex pixel-value multipliers HEX_MQ/HEX_MR (imported above) are
+# defined in sources/multimodal.py NEXT TO THE PAYLOAD WRITER, so the
+# four hex oracles below and the writer can never drift (r11 review
+# #1; the modulus-wrap sizing argument lives with the definition).
 
 # hex pixel CTE shared by every hex-camera oracle (X68 tailcut, X70
 # connected components): ring column is cam_r because DuckDB
@@ -316,13 +587,12 @@ def q_tailcut_hex(spark: SparkSession, sf_dir: str) -> DataFrame:
     between camera geometry and the cleaners; every other raster op
     here assumes a rectangular grid with 4/8-neighborhoods. This op
     runs the X58 two-threshold rescue rule over a ring-R axial hex
-    camera (public hex-grid math), with neighbors resolved through a
-    BROADCAST ADJACENCY TABLE (sc.broadcast of hex_geometry's
-    index-mapped neighbor lists, one per camera size) instead of
-    array shifts — the geometry-agnostic formulation
-    (tailcut_adjacency) that a real camera-geometry port drops into.
-    A degenerate rectangular adjacency reproduces X58 exactly
-    (pytest pins it).
+    camera (public hex-grid math), with neighbors resolved through
+    an INDEX-MAPPED ADJACENCY TABLE (hex_geometry's neighbor lists,
+    one per camera size, from the process-cached
+    hex_geometry_tables) — the same tailcut_masks kernel X58 runs
+    over the square grid's 8-neighbor table, the geometry-agnostic
+    formulation a real camera-geometry port drops into.
 
     Correctness: the Spark side PARSES the HEX1 payload and walks the
     adjacency table; the DuckDB oracle re-derives every pixel and
@@ -332,54 +602,9 @@ def q_tailcut_hex(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: stateless Arrow-batched mapInPandas over the camera scan,
     zero shuffles; the adjacency tables are a few KB per camera size,
-    broadcast once — exactly how a production geometry table ships.
+    built once per worker process (~10 ms) rather than shipped.
     """
-    import numpy as np
-
-    from ..sources.multimodal import (
-        hex_geometry_tables,
-        hexcam_parse,
-        hexcam_table,
-    )
-
-    badj = spark.sparkContext.broadcast(hex_geometry_tables())
-
-    def clean(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("media_id", "n_pix", "n_core", "n_rescued", "kept_sum")
-        for pdf in batches:
-            rows = {k: [] for k in cols}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                R, v = hexcam_parse(bytes(p))
-                nb_idx = badj.value[R][0]
-                n_core, n_rescued, kept_sum = tailcut_adjacency(
-                    v, nb_idx, TAIL2D_HI, TAIL2D_LO
-                )
-                rows["media_id"].append(mid)
-                rows["n_pix"].append(len(v))
-                rows["n_core"].append(n_core)
-                rows["n_rescued"].append(n_rescued)
-                rows["kept_sum"].append(kept_sum)
-            yield pd.DataFrame(rows, columns=list(cols))
-
-    out = hexcam_table(spark, sf_dir).mapInPandas(
-        clean,
-        schema="media_id bigint, n_pix bigint, n_core bigint, "
-        "n_rescued bigint, kept_sum bigint",
-    )
-    n_kept = F.col("n_core") + F.col("n_rescued")
-    return out.select(
-        "media_id",
-        "n_pix",
-        "n_core",
-        "n_rescued",
-        n_kept.alias("n_kept"),
-        "kept_sum",
-        F.round(
-            F.col("kept_sum").cast("double")
-            / F.when(n_kept > 0, n_kept).otherwise(F.lit(None)),
-            6,
-        ).alias("kept_mean"),
-    )
+    return _tailcut(spark, sf_dir, HEX, n_pix="n_pix")
 
 
 @register(
@@ -455,161 +680,21 @@ def q_connected_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept island's size and signal. Images with NO pixel above the
     threshold emit no row (matching the oracle's empty group).
 
-    Spark side: per-image union-find over horizontal RUNS (≤2 runs
-    per row on this raster family, so ~h·2 nodes, not w·h) inside a
-    stateless Arrow-batched kernel. Oracle side: the same run
-    decomposition via gaps-and-islands, run adjacency as an interval-
-    overlap self-join on consecutive rows, and component labels as
-    min-label transitive closure via a RECURSIVE CTE (UNION-distinct
-    bounds the closure at Σ component_size² run pairs — a few
-    thousand per image). All outputs integer-exact.
+    Spark side: connected_components over the 4-neighbor table of
+    rect_geometry(w, h) — the same node-only labelling X70 runs on
+    hex — inside a stateless Arrow-batched kernel. Oracle side: a
+    run decomposition via gaps-and-islands, run adjacency as an
+    interval-overlap self-join on consecutive rows, and component
+    labels as min-label transitive closure via a RECURSIVE CTE
+    (UNION-distinct bounds the closure at Σ component_size² run pairs
+    — a few thousand per image). All outputs integer-exact.
 
     Scale: zero shuffles on the Spark side (per-image work is local
     to the scan); at 100 TB this is the classic embarrassingly
     parallel cleaning pass; only the oracle pays the closure, and
     only at parity-check scale.
     """
-    import numpy as np
-
-    from ..sources.multimodal import fits_parse, fits_table
-
-    def clean(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in (
-                    "media_id",
-                    "n_islands",
-                    "n_isolated",
-                    "n_above",
-                    "kept_size",
-                    "kept_sum",
-                )
-            }
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                _, phys = fits_parse(bytes(p))
-                v = phys.astype(np.int64)
-                mask = v >= CC2D_T
-                if not mask.any():
-                    continue
-                # union-find over horizontal runs (4-connectivity)
-                parent: list[int] = []
-
-                def find(i: int) -> int:
-                    while parent[i] != i:
-                        parent[i] = parent[parent[i]]
-                        i = parent[i]
-                    return i
-
-                def union(a: int, b: int) -> None:
-                    ra, rb = find(a), find(b)
-                    if ra != rb:
-                        parent[max(ra, rb)] = min(ra, rb)
-
-                runs: list[tuple[int, int, int, int, int]] = []  # y,x0,x1,sz,sig
-                prev_row: list[int] = []  # run ids in row y-1
-                h, _ = mask.shape
-                for y in range(h):
-                    idx = np.flatnonzero(mask[y])
-                    cur: list[int] = []
-                    if len(idx):
-                        # split idx into maximal consecutive runs
-                        brk = np.flatnonzero(np.diff(idx) > 1)
-                        starts = np.concatenate(([0], brk + 1))
-                        ends = np.concatenate((brk, [len(idx) - 1]))
-                        for s, e in zip(starts, ends):
-                            x0, x1 = int(idx[s]), int(idx[e])
-                            rid = len(runs)
-                            parent.append(rid)
-                            sig = int(v[y, x0 : x1 + 1].sum())
-                            runs.append((y, x0, x1, x1 - x0 + 1, sig))
-                            for pid in prev_row:
-                                py, px0, px1 = runs[pid][0], runs[pid][1], runs[pid][2]
-                                if px0 <= x1 and x0 <= px1:
-                                    union(rid, pid)
-                            cur.append(rid)
-                    prev_row = cur
-                comps: dict[int, list[int]] = {}
-                for rid, (y, x0, x1, sz, sig) in enumerate(runs):
-                    root = find(rid)
-                    st = comps.setdefault(root, [0, 0, 1 << 30])
-                    st[0] += sz
-                    st[1] += sig
-                    st[2] = min(st[2], y * 64 + x0)
-                islands = sorted(comps.values(), key=lambda s: (-s[1], s[2]))
-                rows["media_id"].append(mid)
-                rows["n_islands"].append(len(islands))
-                rows["n_isolated"].append(sum(1 for s in islands if s[0] == 1))
-                rows["n_above"].append(int(mask.sum()))
-                rows["kept_size"].append(islands[0][0])
-                rows["kept_sum"].append(islands[0][1])
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id",
-                    "n_islands",
-                    "n_isolated",
-                    "n_above",
-                    "kept_size",
-                    "kept_sum",
-                ],
-            )
-
-    return fits_table(spark, sf_dir).mapInPandas(
-        clean,
-        schema="media_id bigint, n_islands bigint, n_isolated bigint, "
-        "n_above bigint, kept_size bigint, kept_sum bigint",
-    )
-
-
-def connected_adjacency(v, nb_idx, thresh: int, order_key):
-    """Connected components over an INDEX-MAPPED neighbor list: v is
-    the flat pixel vector, nb_idx an (npix, k) adjacency table with
-    -1 for absent neighbors, order_key an int64 per-pixel tie-break
-    key (row-major linear id on rect grids, (r,q)-encoded on hex).
-    Union-find over the above-``thresh`` nodes; returns
-    (n_islands, n_isolated, n_above, kept_size, kept_sum) for the
-    largest-total-signal island (ties: smallest order_key), or None
-    when no pixel passes. Geometry-agnostic — the hex camera feeds
-    its 6-neighbor table, and a 4-neighbor rectangular table
-    reproduces X59's run-based union-find exactly (pytest pins the
-    equivalence across all images)."""
-    import numpy as np
-
-    mask = v >= thresh
-    nodes = np.flatnonzero(mask)
-    if len(nodes) == 0:
-        return None
-    pos = np.full(len(v), -1, np.int64)
-    pos[nodes] = np.arange(len(nodes))
-    parent = list(range(len(nodes)))
-
-    def find(i: int) -> int:
-        while parent[i] != i:
-            parent[i] = parent[parent[i]]
-            i = parent[i]
-        return i
-
-    for ni, oi in enumerate(nodes):
-        for j in nb_idx[oi]:
-            if j >= 0 and mask[j] and j < oi:
-                ra, rb = find(ni), find(int(pos[j]))
-                if ra != rb:
-                    parent[rb] = ra
-    comps: dict[int, list[int]] = {}
-    for ni, oi in enumerate(nodes):
-        st = comps.setdefault(find(ni), [0, 0, 1 << 62])
-        st[0] += 1
-        st[1] += int(v[oi])
-        st[2] = min(st[2], int(order_key[oi]))
-    islands = sorted(comps.values(), key=lambda s: (-s[1], s[2]))
-    return (
-        len(islands),
-        sum(1 for s in islands if s[0] == 1),
-        int(mask.sum()),
-        islands[0][0],
-        islands[0][1],
-    )
+    return _connected(spark, sf_dir, SQUARE)
 
 
 @register(
@@ -691,59 +776,20 @@ def q_connected_hex(spark: SparkSession, sf_dir: str) -> DataFrame:
     the kept island's size and signal — X59's report on X68's
     geometry. Images with no pixel above the threshold emit no row.
 
-    Spark side: the geometry-agnostic union-find
-    (``connected_adjacency``) over the SAME broadcast adjacency
-    tables X68 ships — a 4-neighbor rectangular table reproduces
-    X59's run-based kernel exactly (pytest pins all 500 images
-    equal). Oracle side: the X59 recursive run-graph closure adapted
-    to hex row adjacency — runs of consecutive q within each r-row,
-    linked iff B.q0 <= A.q1 AND B.q1 >= A.q0 - 1 (the axial-shear
-    interval overlap), min-label closure in a RECURSIVE CTE. All
-    outputs integer-exact.
+    Spark side: the geometry-agnostic connected_components over the
+    SAME adjacency tables X68 reads (X59 runs it over the square
+    grid's 4-neighbor table). Oracle side: the X59 recursive
+    run-graph closure adapted to hex row adjacency — runs of
+    consecutive q within each r-row, linked iff B.q0 <= A.q1 AND
+    B.q1 >= A.q0 - 1 (the axial-shear interval overlap), min-label
+    closure in a RECURSIVE CTE. All outputs integer-exact.
 
     Scale: stateless Arrow-batched mapInPandas over the camera scan,
-    zero shuffles; the union-find touches above-threshold nodes (~1/8
-    of pixels at this threshold), per image, in Python-speed but
-    C-bounded counts. Only the oracle pays the closure, at parity
-    scale.
+    zero shuffles; the labelling touches above-threshold nodes (~1/8
+    of pixels at this threshold) in vectorised rounds. Only the
+    oracle pays the closure, at parity scale.
     """
-    import numpy as np
-
-    from ..sources.multimodal import (
-        hex_geometry_tables,
-        hexcam_parse,
-        hexcam_table,
-    )
-
-    badj = spark.sparkContext.broadcast(hex_geometry_tables())
-
-    def clean(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = (
-            "media_id",
-            "n_islands",
-            "n_isolated",
-            "n_above",
-            "kept_size",
-            "kept_sum",
-        )
-        for pdf in batches:
-            rows = {k: [] for k in cols}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                R, v = hexcam_parse(bytes(p))
-                nb_idx, _, _, key = badj.value[R]
-                got = connected_adjacency(v, nb_idx, CC2D_T, key)
-                if got is None:
-                    continue
-                rows["media_id"].append(mid)
-                for c, val in zip(cols[1:], got):
-                    rows[c].append(val)
-            yield pd.DataFrame(rows, columns=list(cols))
-
-    return hexcam_table(spark, sf_dir).mapInPandas(
-        clean,
-        schema="media_id bigint, n_islands bigint, n_isolated bigint, "
-        "n_above bigint, kept_size bigint, kept_sum bigint",
-    )
+    return _connected(spark, sf_dir, HEX)
 
 
 def _hex_ellipse_sql(src: str, carry: tuple[str, ...] = ()) -> str:
@@ -751,7 +797,7 @@ def _hex_ellipse_sql(src: str, carry: tuple[str, ...] = ()) -> str:
     ``src`` (must expose doc_id, n_kept, s0, sq, sr, sqq, srr, sqr
     plus ``carry``); yields doc_id, n_kept, s0, carry…, cx, cy, vxx,
     vyy, vxy, rr. ONE copy of the SQL expression tree shared by the
-    X71/X72 oracles, mirroring _hex_ellipse_exprs term for term —
+    X71/X72 oracles, mirroring _hex_cartesian + _ellipse term for term —
     the bit-identity bet requires the fused and staged ops to stay
     textually synchronized, so there is exactly one text (r11 review
     #4)."""
@@ -784,42 +830,6 @@ def _hex_ellipse_sql(src: str, carry: tuple[str, ...] = ()) -> str:
                 )
             )
         )"""
-
-
-def _hex_ellipse_exprs() -> dict:
-    """Spark-side twin of _hex_ellipse_sql: the axial→cartesian change
-    of basis (x = q + r/2, y = (√3/2)·r at unit pitch) and the
-    covariance/eigen terms as column expressions over the integer
-    moment columns sq…sqr, s0. Shared by q_hillas_hex and
-    q_pipeline_hex so the fused op's ellipse is the staged op's
-    ellipse by construction."""
-    sqd = F.col("sq").cast("double")
-    srd = F.col("sr").cast("double")
-    sqqd = F.col("sqq").cast("double")
-    srrd = F.col("srr").cast("double")
-    sqrd = F.col("sqr").cast("double")
-    half_r3 = F.sqrt(F.lit(3.0)) / 2
-    sx = sqd + srd / 2
-    sy = half_r3 * srd
-    sxx = sqqd + sqrd + srrd / 4
-    sxy = half_r3 * (sqrd + srrd / 2)
-    syy = F.lit(0.75) * srrd
-    s0d = F.col("s0").cast("double")
-    cx = sx / s0d
-    cy = sy / s0d
-    vxx = sxx / s0d - cx * cx
-    vyy = syy / s0d - cy * cy
-    vxy = sxy / s0d - cx * cy
-    rr = F.sqrt((vxx - vyy) * (vxx - vyy) + 4 * vxy * vxy)
-    return {
-        "cog_x": F.round(cx, 6),
-        "cog_y": F.round(cy, 6),
-        "length": F.round(F.sqrt((vxx + vyy + rr) / 2), 6),
-        "width": F.round(
-            F.sqrt(F.greatest((vxx + vyy - rr) / 2, F.lit(0.0))), 6
-        ),
-        "psi": F.round(F.atan2(2 * vxy, vxx - vyy) / 2, 6),
-    }
 
 
 @register(
@@ -881,58 +891,11 @@ def q_hillas_hex(spark: SparkSession, sf_dir: str) -> DataFrame:
     extra exactly-mirrored linear layer).
 
     Scale: moments reduce INSIDE the stateless Arrow kernel (one row
-    per image, zero shuffles); the change of basis + ellipse is a
-    codegen scalar pass; the adjacency tables broadcast once.
+    per image, zero shuffles; the kernel is X72's, projected); the
+    change of basis + ellipse is a codegen scalar pass over the
+    _ellipse tree X62 uses.
     """
-    import numpy as np
-
-    from ..sources.multimodal import (
-        hex_geometry_tables,
-        hexcam_parse,
-        hexcam_table,
-    )
-
-    bgeo = spark.sparkContext.broadcast(hex_geometry_tables())
-
-    def moments(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["media_id", "n_kept", "s0", "sq", "sr", "sqq", "srr", "sqr"]
-        for pdf in batches:
-            rows = {k: [] for k in cols}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                R, v = hexcam_parse(bytes(p))
-                nb_idx, qs, rs, _ = bgeo.value[R]
-                core, rescued = tailcut_masks(v, nb_idx, TAIL2D_HI, TAIL2D_LO)
-                kept = core | rescued
-                n_kept = int(kept.sum())
-                if n_kept < 3:
-                    continue
-                kv = np.where(kept, v, 0)
-                rows["media_id"].append(mid)
-                rows["n_kept"].append(n_kept)
-                rows["s0"].append(int(kv.sum()))
-                rows["sq"].append(int((qs * kv).sum()))
-                rows["sr"].append(int((rs * kv).sum()))
-                rows["sqq"].append(int((qs * qs * kv).sum()))
-                rows["srr"].append(int((rs * rs * kv).sum()))
-                rows["sqr"].append(int((qs * rs * kv).sum()))
-            yield pd.DataFrame(rows, columns=cols)
-
-    sums = hexcam_table(spark, sf_dir).mapInPandas(
-        moments,
-        schema="media_id bigint, n_kept bigint, s0 bigint, sq bigint, "
-        "sr bigint, sqq bigint, srr bigint, sqr bigint",
-    )
-    e = _hex_ellipse_exprs()
-    return sums.select(
-        "media_id",
-        "n_kept",
-        F.col("s0").alias("size"),
-        e["cog_x"].alias("cog_x"),
-        e["cog_y"].alias("cog_y"),
-        e["length"].alias("length"),
-        e["width"].alias("width"),
-        e["psi"].alias("psi"),
-    )
+    return _hillas(spark, sf_dir, HEX)
 
 
 def _conv_pass_sql(
@@ -1070,8 +1033,6 @@ def q_atrous_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     at parity scale.
     """
     import numpy as np
-
-    from ..sources.multimodal import fits_parse, fits_table
 
     def filt(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1211,8 +1172,6 @@ def q_atrous_ksigma(spark: SparkSession, sf_dir: str) -> DataFrame:
     median-aggregate CTE at parity scale only.
     """
     import numpy as np
-
-    from ..sources.multimodal import fits_parse, fits_table
 
     def filt(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -1384,104 +1343,11 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     single stateless Arrow-batched kernel per image (zero shuffles,
     one scan), then a codegen scalar pass for ellipse/score math. The
     reference runs 5 separate per-image Python stages with temp FITS
-    files between them; here stage boundaries are column expressions.
+    files between them; here stage boundaries are column expressions,
+    and the kernel and ellipse tree are X62's (X72 runs the same ones
+    on hex cameras).
     """
-    import numpy as np
-
-    from ..sources.multimodal import fits_parse, fits_table
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "media_id", "n_pixels", "e_in", "n_core", "n_rescued",
-            "s0", "sx", "sy", "sxx", "syy", "sxy", "e_kept",
-        ]
-        for pdf in batches:
-            rows = {k: [] for k in cols}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                _, phys = fits_parse(bytes(p))
-                v = phys.astype(np.int64)
-                core = v >= TAIL2D_HI
-                boundary = v >= TAIL2D_LO
-                nb_core = np.zeros_like(core)
-                for dy in (-1, 0, 1):
-                    for dx in (-1, 0, 1):
-                        if dx == 0 and dy == 0:
-                            continue
-                        nb_core |= _shift2d(core, dy, dx)
-                rescued = boundary & ~core & nb_core
-                kept = core | rescued
-                n_kept = int(kept.sum())
-                if n_kept < 3:
-                    continue
-                h, w = v.shape
-                xs = np.arange(w, dtype=np.int64)[None, :]
-                ys = np.arange(h, dtype=np.int64)[:, None]
-                kv = np.where(kept, v, 0)
-                rows["media_id"].append(mid)
-                rows["n_pixels"].append(v.size)
-                rows["e_in"].append(int((v * v).sum()))
-                rows["n_core"].append(int(core.sum()))
-                rows["n_rescued"].append(int(rescued.sum()))
-                rows["s0"].append(int(kv.sum()))
-                rows["sx"].append(int((xs * kv).sum()))
-                rows["sy"].append(int((ys * kv).sum()))
-                rows["sxx"].append(int((xs * xs * kv).sum()))
-                rows["syy"].append(int((ys * ys * kv).sum()))
-                rows["sxy"].append(int((xs * ys * kv).sum()))
-                rows["e_kept"].append(int((kv * kv).sum()))
-            yield pd.DataFrame(rows, columns=cols)
-
-    sums = fits_table(spark, sf_dir).mapInPandas(
-        kernel,
-        schema="media_id bigint, n_pixels bigint, e_in bigint, "
-        "n_core bigint, n_rescued bigint, s0 bigint, sx bigint, "
-        "sy bigint, sxx bigint, syy bigint, sxy bigint, e_kept bigint",
-    )
-    n_kept = (F.col("n_core") + F.col("n_rescued")).alias("n_kept")
-    s0d = F.col("s0").cast("double")
-    cx = F.col("sx").cast("double") / s0d
-    cy = F.col("sy").cast("double") / s0d
-    vxx = F.col("sxx").cast("double") / s0d - cx * cx
-    vyy = F.col("syy").cast("double") / s0d - cy * cy
-    vxy = F.col("sxy").cast("double") / s0d - cx * cy
-    rr = F.sqrt((vxx - vyy) * (vxx - vyy) + 4 * vxy * vxy)
-    dropped = (F.col("e_in") - F.col("e_kept")).cast("double")
-    mse_micro = F.round(dropped * 1_000_000 / F.col("n_pixels")).cast("long")
-    energy_ppm = F.round(
-        F.col("e_kept").cast("double") * 1_000_000 / F.col("e_in")
-    ).cast("long")
-    return sums.select(
-        "media_id",
-        "n_pixels",
-        "n_core",
-        "n_rescued",
-        n_kept,
-        F.col("s0").alias("size"),
-        F.round(cx, 6).alias("cog_x"),
-        F.round(cy, 6).alias("cog_y"),
-        F.round(F.sqrt((vxx + vyy + rr) / 2), 6).alias("length"),
-        F.round(F.sqrt(F.greatest((vxx + vyy - rr) / 2, F.lit(0.0))), 6).alias(
-            "width"
-        ),
-        F.round(F.atan2(2 * vxy, vxx - vyy) / 2, 6).alias("psi"),
-        F.round(dropped / F.col("n_pixels"), 6).alias("mse"),
-        F.round(F.col("e_kept").cast("double") / F.col("e_in"), 6).alias(
-            "energy_ratio"
-        ),
-        F.concat(
-            F.lit('{"media_id":'),
-            F.col("media_id").cast("string"),
-            F.lit(',"n_kept":'),
-            (F.col("n_core") + F.col("n_rescued")).cast("string"),
-            F.lit(',"size":'),
-            F.col("s0").cast("string"),
-            F.lit(',"mse_micro":'),
-            mse_micro.cast("string"),
-            F.lit(',"energy_ppm":'),
-            energy_ppm.cast("string"),
-            F.lit("}"),
-        ).alias("score_json"),
-    )
+    return _pipeline(spark, sf_dir, SQUARE, n_pix="n_pixels")
 
 
 @register(
@@ -1580,7 +1446,7 @@ def q_pipeline_hex(spark: SparkSession, sf_dir: str) -> DataFrame:
     X63's fused load→clean→Hillas→assess→JSON-score pass, but over
     hex cameras end to end (r11; the reference's CLI runs on hex
     camera data, so the truest composed-fidelity op is this one):
-    HEX1 scan+parse → X68's tailcut over the broadcast adjacency →
+    HEX1 scan+parse → X68's tailcut over the hex adjacency table →
     X71's axial integer moments + change of basis → assess
     (dropped-energy MSE, kept-energy ratio — exact integer ratios) →
     MT8-shape JSON score document built from INTEGER fields only.
@@ -1594,89 +1460,9 @@ def q_pipeline_hex(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one stateless Arrow kernel per image (zero shuffles, one
     scan), codegen scalar pass for basis change + ellipse + score —
-    the X63 shape with the geometry table broadcast once.
+    X63's kernel and expression tree on the hex camera.
     """
-    import numpy as np
-
-    from ..sources.multimodal import (
-        hex_geometry_tables,
-        hexcam_parse,
-        hexcam_table,
-    )
-
-    bgeo = spark.sparkContext.broadcast(hex_geometry_tables())
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "media_id", "n_pix", "e_in", "n_core", "n_rescued",
-            "s0", "sq", "sr", "sqq", "srr", "sqr", "e_kept",
-        ]
-        for pdf in batches:
-            rows = {k: [] for k in cols}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                R, v = hexcam_parse(bytes(p))
-                nb_idx, qs, rs, _ = bgeo.value[R]
-                core, rescued = tailcut_masks(v, nb_idx, TAIL2D_HI, TAIL2D_LO)
-                kept = core | rescued
-                if int(kept.sum()) < 3:
-                    continue
-                kv = np.where(kept, v, 0)
-                rows["media_id"].append(mid)
-                rows["n_pix"].append(len(v))
-                rows["e_in"].append(int((v * v).sum()))
-                rows["n_core"].append(int(core.sum()))
-                rows["n_rescued"].append(int(rescued.sum()))
-                rows["s0"].append(int(kv.sum()))
-                rows["sq"].append(int((qs * kv).sum()))
-                rows["sr"].append(int((rs * kv).sum()))
-                rows["sqq"].append(int((qs * qs * kv).sum()))
-                rows["srr"].append(int((rs * rs * kv).sum()))
-                rows["sqr"].append(int((qs * rs * kv).sum()))
-                rows["e_kept"].append(int((kv * kv).sum()))
-            yield pd.DataFrame(rows, columns=cols)
-
-    sums = hexcam_table(spark, sf_dir).mapInPandas(
-        kernel,
-        schema="media_id bigint, n_pix bigint, e_in bigint, "
-        "n_core bigint, n_rescued bigint, s0 bigint, sq bigint, "
-        "sr bigint, sqq bigint, srr bigint, sqr bigint, e_kept bigint",
-    )
-    e = _hex_ellipse_exprs()
-    dropped = (F.col("e_in") - F.col("e_kept")).cast("double")
-    mse_micro = F.round(dropped * 1_000_000 / F.col("n_pix")).cast("long")
-    energy_ppm = F.round(
-        F.col("e_kept").cast("double") * 1_000_000 / F.col("e_in")
-    ).cast("long")
-    return sums.select(
-        "media_id",
-        "n_pix",
-        "n_core",
-        "n_rescued",
-        (F.col("n_core") + F.col("n_rescued")).alias("n_kept"),
-        F.col("s0").alias("size"),
-        e["cog_x"].alias("cog_x"),
-        e["cog_y"].alias("cog_y"),
-        e["length"].alias("length"),
-        e["width"].alias("width"),
-        e["psi"].alias("psi"),
-        F.round(dropped / F.col("n_pix"), 6).alias("mse"),
-        F.round(F.col("e_kept").cast("double") / F.col("e_in"), 6).alias(
-            "energy_ratio"
-        ),
-        F.concat(
-            F.lit('{"media_id":'),
-            F.col("media_id").cast("string"),
-            F.lit(',"n_kept":'),
-            (F.col("n_core") + F.col("n_rescued")).cast("string"),
-            F.lit(',"size":'),
-            F.col("s0").cast("string"),
-            F.lit(',"mse_micro":'),
-            mse_micro.cast("string"),
-            F.lit(',"energy_ppm":'),
-            energy_ppm.cast("string"),
-            F.lit("}"),
-        ).alias("score_json"),
-    )
+    return _pipeline(spark, sf_dir, HEX, n_pix="n_pix")
 
 
 _HILLAS_SUMS = """
@@ -1756,73 +1542,9 @@ def q_hillas_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     case with GREATEST(·, 0) on both sides.
 
     Scale: the moments reduce INSIDE the stateless Arrow kernel (one
-    output row per image, zero shuffles); the ellipse math is a
-    codegen scalar pass. This is the classic cleaned-image →
+    output row per image, zero shuffles; the kernel is X63's,
+    projected); the ellipse math is a codegen scalar pass. This is
+    the classic cleaned-image →
     feature-vector step a 100 TB survey pipeline runs after X58/X60.
     """
-    import numpy as np
-
-    from ..sources.multimodal import fits_parse, fits_table
-
-    def moments(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                k: []
-                for k in ("media_id", "n_kept", "s0", "sx", "sy", "sxx", "syy", "sxy")
-            }
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                _, phys = fits_parse(bytes(p))
-                v = phys.astype(np.int64)
-                core = v >= TAIL2D_HI
-                boundary = v >= TAIL2D_LO
-                nb_core = np.zeros_like(core)
-                for dy in (-1, 0, 1):
-                    for dx in (-1, 0, 1):
-                        if dx == 0 and dy == 0:
-                            continue
-                        nb_core |= _shift2d(core, dy, dx)
-                kept = core | (boundary & nb_core)
-                n_kept = int(kept.sum())
-                if n_kept < 3:
-                    continue
-                h, w = v.shape
-                xs = np.arange(w, dtype=np.int64)[None, :]
-                ys = np.arange(h, dtype=np.int64)[:, None]
-                kv = np.where(kept, v, 0)
-                rows["media_id"].append(mid)
-                rows["n_kept"].append(n_kept)
-                rows["s0"].append(int(kv.sum()))
-                rows["sx"].append(int((xs * kv).sum()))
-                rows["sy"].append(int((ys * kv).sum()))
-                rows["sxx"].append(int((xs * xs * kv).sum()))
-                rows["syy"].append(int((ys * ys * kv).sum()))
-                rows["sxy"].append(int((xs * ys * kv).sum()))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "n_kept", "s0", "sx", "sy", "sxx", "syy", "sxy"],
-            )
-
-    sums = fits_table(spark, sf_dir).mapInPandas(
-        moments,
-        schema="media_id bigint, n_kept bigint, s0 bigint, sx bigint, "
-        "sy bigint, sxx bigint, syy bigint, sxy bigint",
-    )
-    s0d = F.col("s0").cast("double")
-    cx = F.col("sx").cast("double") / s0d
-    cy = F.col("sy").cast("double") / s0d
-    vxx = F.col("sxx").cast("double") / s0d - cx * cx
-    vyy = F.col("syy").cast("double") / s0d - cy * cy
-    vxy = F.col("sxy").cast("double") / s0d - cx * cy
-    rr = F.sqrt((vxx - vyy) * (vxx - vyy) + 4 * vxy * vxy)
-    return sums.select(
-        "media_id",
-        "n_kept",
-        F.col("s0").alias("size"),
-        F.round(cx, 6).alias("cog_x"),
-        F.round(cy, 6).alias("cog_y"),
-        F.round(F.sqrt((vxx + vyy + rr) / 2), 6).alias("length"),
-        F.round(F.sqrt(F.greatest((vxx + vyy - rr) / 2, F.lit(0.0))), 6).alias(
-            "width"
-        ),
-        F.round(F.atan2(2 * vxy, vxx - vyy) / 2, 6).alias("psi"),
-    )
+    return _hillas(spark, sf_dir, SQUARE)

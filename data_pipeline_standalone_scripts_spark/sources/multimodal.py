@@ -1302,7 +1302,7 @@ def hex_geometry(R: int):
     kernel, so one definition serves both. nb: int32 array (npix, 6)
     of neighbor pix_ids, -1 where the neighbor falls outside the
     camera — the index-mapped adjacency table the cleaners consume
-    instead of rectangular array shifts."""
+    (rect_geometry gives the square grid the same form)."""
     import numpy as np
 
     pts = [
@@ -1336,10 +1336,7 @@ def hexcam_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Generation is a stateless Arrow-batched mapInPandas kernel (same
     shape as fits_table, same parallelism crutch)."""
-    import numpy as np
     import pandas as pd
-
-    geos: dict[int, "np.ndarray"] = {}
 
     def gen(batches):
         for pdf in batches:
@@ -1347,14 +1344,9 @@ def hexcam_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             for doc_id in pdf["doc_id"]:
                 doc_id = int(doc_id)
                 R = 10 + doc_id % 6
-                if R not in geos:
-                    pts, _ = hex_geometry(R)
-                    geos[R] = np.array(pts, dtype=np.int64)
-                qr = geos[R]
+                _, _, qs, rs, _ = hex_geometry_tables()[R]
                 v = (
-                    HEX_MQ * (qr[:, 0] + R)
-                    + HEX_MR * (qr[:, 1] + R)
-                    + 11 * doc_id
+                    HEX_MQ * (qs + R) + HEX_MR * (rs + R) + 11 * doc_id
                 ) % 4096
                 payloads.append(
                     HEXCAM_MAGIC
@@ -1374,10 +1366,12 @@ def hexcam_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @functools.cache
 def hex_geometry_tables() -> dict[int, tuple]:
-    """{R: (nb, qs, rs, order_key)} for every camera size the fixture
-    family ships (HEXCAM_R_RANGE) — built once per process and shared
-    by all hex ops, which sc.broadcast it as their adjacency/geometry
-    table (read-only). order_key = (r+R)*4096 + (q+R): the
+    """{R: (tail_nb, conn_nb, qs, rs, order_key)} for every camera size
+    the fixture family ships (HEXCAM_R_RANGE) — the hex camera's
+    geometry in the shape rect_geometry gives the square grid, built
+    once per process (workers call it too: ~10 ms cold, no broadcast,
+    nothing left on disk). On the hex lattice both rules use the same
+    6-neighbor table. order_key = (r+R)*4096 + (q+R): the
     deterministic (r, q) tie-break every hex op uses (matches the
     oracles' first_px)."""
     import numpy as np
@@ -1387,8 +1381,41 @@ def hex_geometry_tables() -> dict[int, tuple]:
         pts, nb = hex_geometry(R)
         qr = np.array(pts, dtype=np.int64)
         key = (qr[:, 1] + R) * 4096 + (qr[:, 0] + R)
-        tables[R] = (nb, qr[:, 0], qr[:, 1], key)
+        tables[R] = _read_only(nb, nb, qr[:, 0], qr[:, 1], key)
     return tables
+
+
+@functools.cache
+def rect_geometry(w: int, h: int) -> tuple:
+    """(tail_nb, conn_nb, xs, ys, order_key) for a w×h square-grid
+    image flattened row-major (pixel y*w + x — ``phys.ravel()`` of a
+    FITS raster): tail_nb is the (w*h, 8) 8-neighbor table tailcut
+    rescues over, conn_nb its first four columns (the 4-neighbors the
+    island labelling joins over), -1 where a neighbor falls off the
+    grid; order_key = y*64 + x is the row-major tie-break the oracles'
+    first_px uses. Cached per size like hex_geometry_tables, so a
+    worker builds each raster shape once: int16 entries (int32 past
+    their range) keep the ~770 FITS shapes of an sf0.1 run at ~27 MiB
+    per worker, at no measured cost to the kernels over int32."""
+    import numpy as np
+
+    dt = np.int16 if max(w, 64) * h <= np.iinfo(np.int16).max else np.int32
+    ys, xs = np.divmod(np.arange(w * h, dtype=dt), dt(w))
+    steps = ((1, 0), (-1, 0), (0, 1), (0, -1), (1, 1), (1, -1), (-1, 1), (-1, -1))
+    nb = np.full((w * h, len(steps)), -1, dt)
+    for k, (dx, dy) in enumerate(steps):
+        xx, yy = xs + dx, ys + dy
+        ok = (xx >= 0) & (xx < w) & (yy >= 0) & (yy < h)
+        nb[ok, k] = (yy * w + xx)[ok]
+    return _read_only(nb, nb[:, :4], xs, ys, ys * 64 + xs)
+
+
+def _read_only(*arrays) -> tuple:
+    """The cached geometry arrays, frozen: every caller in the process
+    shares them, so a write would corrupt later images' results."""
+    for a in arrays:
+        a.flags.writeable = False
+    return arrays
 
 
 def hexcam_parse(payload: bytes):

@@ -191,7 +191,11 @@ def _sources(*subs):
 def test_query_path_writes_no_session_state():
     """Source guard over operators/ and functions/: no temp view is
     registered, no session conf is set or unset, and conf reads are
-    limited to the two deployment keys."""
+    limited to the two deployment keys. Over operators/, functions/
+    and sources/: nothing is broadcast through the SparkContext (a
+    broadcast leaves a file in the driver's temp directory that no
+    release removes; a fill-once table is a functools.cache'd
+    function that workers call)."""
     offenders = []
     for rel, src in _sources("operators", "functions"):
         for token in ("TempView(", "register_views", "conf.set(", "conf.unset("):
@@ -200,6 +204,9 @@ def test_query_path_writes_no_session_state():
         for key in re.findall(r"conf\.get\(\s*([^,)\s]+)", src):
             if key not in DEPLOYMENT_CONF_KEYS:
                 offenders.append((rel, f"conf.get({key})"))
+    for rel, src in _sources("operators", "functions", "sources"):
+        if "sparkContext.broadcast(" in src:
+            offenders.append((rel, "sparkContext.broadcast("))
     assert not offenders, offenders
 
 
@@ -281,6 +288,24 @@ def test_scans_io_builds_are_self_contained(name, spark, sf_small, monkeypatch):
     assert not [d for d in first + second if d.startswith(CHECKOUT + os.sep)]
     assert _checkout_paths() == before
     assert not [d for d in first + second if os.path.exists(d)]
+
+
+def _driver_temp_files(spark) -> set[str]:
+    root = spark.sparkContext._temp_dir
+    return {os.path.join(r, f) for r, _dirs, files in os.walk(root) for f in files}
+
+
+def test_hex_builds_leave_no_driver_temp_files(spark, sf_small):
+    """Build each hex-camera op twice, then run it through
+    registry.run: no file is added under the driver's temp directory
+    (where a SparkContext broadcast of the geometry tables would
+    leave one pickle per build)."""
+    before = _driver_temp_files(spark)
+    for name in ("q_tailcut_hex", "q_connected_hex", "q_hillas_hex", "q_pipeline_hex"):
+        for _ in range(2):
+            REGISTRY[name].fn(spark, sf_small)
+        assert len(run(name, spark, sf_small)) > 400, name
+    assert _driver_temp_files(spark) - before == set()
 
 
 # Disjoint SQL-form, fixture-writing and persisting queries, one thread

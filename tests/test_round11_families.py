@@ -17,13 +17,13 @@ from data_pipeline_standalone_scripts_spark.operators.raster2d import (
     TAIL2D_HI,
     TAIL2D_LO,
     _b3_smooth2d,
-    _shift2d,
-    tailcut_adjacency,
 )
 from data_pipeline_standalone_scripts_spark.sources.multimodal import (
     HEXCAM_MAGIC,
     hex_geometry,
+    hex_geometry_tables,
     hexcam_parse,
+    rect_geometry,
 )
 
 engine.load_all_operators()
@@ -83,44 +83,60 @@ def test_hexcam_payload_roundtrip(spark, sf_small):
         assert np.array_equal(v, expect)
 
 
-def test_tailcut_adjacency_equals_x58_on_rect_grid():
-    """VERDICT r10 #3 'done' condition: the index-mapped adjacency
-    kernel with a DEGENERATE 8-neighbor rectangular table reproduces
-    X58's array-shift kernel exactly."""
-    for doc_id, n_chars in ((5, 17), (42, 3), (123, 30)):
-        w = 32 + n_chars % 32
-        h = 24 + doc_id % 24
-        v = (
-            3 * np.arange(w, dtype=np.int64)[None, :]
-            + 17 * np.arange(h, dtype=np.int64)[:, None]
-            + 11 * doc_id
-        ) % 4096
-        # X58's shift formulation
-        core = v >= TAIL2D_HI
-        nb_core = np.zeros_like(core)
-        for dy in (-1, 0, 1):
-            for dx in (-1, 0, 1):
-                if dx == 0 and dy == 0:
-                    continue
-                nb_core |= _shift2d(core, dy, dx)
-        rescued = (v >= TAIL2D_LO) & ~core & nb_core
-        want = (int(core.sum()), int(rescued.sum()),
-                int(v[core | rescued].sum()))
-        # degenerate rectangular adjacency for the same grid
-        nb = np.full((w * h, 8), -1, np.int32)
-        k = 0
-        for dy in (-1, 0, 1):
-            for dx in (-1, 0, 1):
-                if dx == 0 and dy == 0:
-                    continue
-                for y in range(h):
-                    for x in range(w):
-                        yy, xx = y + dy, x + dx
-                        if 0 <= yy < h and 0 <= xx < w:
-                            nb[y * w + x, k] = yy * w + xx
-                k += 1
-        got = tailcut_adjacency(v.ravel(), nb, TAIL2D_HI, TAIL2D_LO)
-        assert got == want, (doc_id, got, want)
+def _brute_rect_table(w, h, steps):
+    """(w*h, len(steps)) neighbor table of a row-major w×h grid by
+    explicit loops, -1 off the grid."""
+    nb = np.full((w * h, len(steps)), -1, np.int32)
+    for k, (dy, dx) in enumerate(steps):
+        for y in range(h):
+            for x in range(w):
+                yy, xx = y + dy, x + dx
+                if 0 <= yy < h and 0 <= xx < w:
+                    nb[y * w + x, k] = yy * w + xx
+    return nb
+
+
+def _same_neighbors(got, want):
+    """Equal neighbor SETS per pixel (column order is free)."""
+    return got.shape == want.shape and np.array_equal(
+        np.sort(got, axis=1), np.sort(want, axis=1)
+    )
+
+
+# the FITS rasters of docs (5, 17), (42, 3), (123, 30), plus strips
+RECT_SIZES = [(49, 29), (35, 42), (62, 27), (1, 1), (1, 7), (7, 1), (2, 2)]
+
+
+def test_rect_geometry_tailcut_table_matches_brute_force():
+    """The square grid's tailcut table is the 8-neighborhood X58's
+    rule names, and its coordinates and tie-break key are row-major
+    (pixel y*w + x, key y*64 + x — the oracles' first_px)."""
+    steps8 = [(dy, dx) for dy in (-1, 0, 1) for dx in (-1, 0, 1) if (dy, dx) != (0, 0)]
+    for w, h in RECT_SIZES:
+        tail_nb, _, xs, ys, key = rect_geometry(w, h)
+        assert _same_neighbors(tail_nb, _brute_rect_table(w, h, steps8)), (w, h)
+        assert np.array_equal(ys * w + xs, np.arange(w * h)), (w, h)
+        assert np.array_equal(key, ys * 64 + xs), (w, h)
+        assert not tail_nb.flags.writeable and not key.flags.writeable
+
+
+def test_rect_geometry_connectivity_table_matches_brute_force():
+    """The square grid's island table is the 4-neighborhood X59's
+    labelling joins over."""
+    steps4 = [(1, 0), (-1, 0), (0, 1), (0, -1)]
+    for w, h in RECT_SIZES:
+        _, conn_nb, _, _, _ = rect_geometry(w, h)
+        assert _same_neighbors(conn_nb, _brute_rect_table(w, h, steps4)), (w, h)
+
+
+def test_hex_geometry_tables_wrap_hex_geometry():
+    """Each hex camera's geometry is hex_geometry's 6-neighbor table
+    for both rules, its axial coordinates and the (r, q) key."""
+    for R, (tail_nb, conn_nb, qs, rs, key) in hex_geometry_tables().items():
+        pts, nb = hex_geometry(R)
+        assert np.array_equal(tail_nb, nb) and np.array_equal(conn_nb, nb)
+        assert list(zip(qs.tolist(), rs.tolist())) == pts
+        assert np.array_equal(key, (rs + R) * 4096 + (qs + R))
 
 
 def test_tailcut_hex_fixture_not_degenerate(spark, sf_small):
@@ -136,64 +152,6 @@ def test_tailcut_hex_fixture_not_degenerate(spark, sf_small):
         assert r.n_kept == r.n_core + r.n_rescued
         assert r.kept_mean == pytest.approx(r.kept_sum / r.n_kept, abs=1e-6)
     assert sum(r.n_rescued for r in rows) > 0
-
-
-def test_connected_adjacency_equals_x59_on_rect_grid(spark, sf_small):
-    """X70's geometry-agnostic union-find with a DEGENERATE 4-neighbor
-    rectangular adjacency must reproduce X59's run-based kernel on
-    every image of the FITS family (different algorithms, same
-    semantics)."""
-    from data_pipeline_standalone_scripts_spark.operators.raster2d import (
-        CC2D_T,
-        connected_adjacency,
-    )
-    from data_pipeline_standalone_scripts_spark.tables import load
-
-    nchars = {
-        r.doc_id: r.n_chars
-        for r in load(spark, sf_small, "documents")
-        .select("doc_id", "n_chars")
-        .collect()
-    }
-    x59 = {
-        r.media_id: r
-        for r in REGISTRY["q_connected_2d"].fn(spark, sf_small).collect()
-    }
-    rect_adj: dict = {}
-    checked = 0
-    for mid in sorted(nchars):
-        v2 = (
-            3 * np.arange(32 + nchars[mid] % 32, dtype=np.int64)[None, :]
-            + 17 * np.arange(24 + mid % 24, dtype=np.int64)[:, None]
-            + 11 * mid
-        ) % 4096
-        h, w = v2.shape
-        if (w, h) not in rect_adj:
-            nb = np.full((w * h, 4), -1, np.int32)
-            for k, (dy, dx) in enumerate(((1, 0), (-1, 0), (0, 1), (0, -1))):
-                for y in range(h):
-                    for x in range(w):
-                        yy, xx = y + dy, x + dx
-                        if 0 <= yy < h and 0 <= xx < w:
-                            nb[y * w + x, k] = yy * w + xx
-            key = (
-                np.arange(h, dtype=np.int64)[:, None] * 64
-                + np.arange(w, dtype=np.int64)[None, :]
-            ).ravel()
-            rect_adj[(w, h)] = (nb, key)
-        nb, key = rect_adj[(w, h)]
-        got = connected_adjacency(v2.ravel(), nb, CC2D_T, key)
-        if mid not in x59:
-            assert got is None, mid
-            continue
-        r = x59[mid]
-        assert got == (
-            r.n_islands, r.n_isolated, r.n_above, r.kept_size, r.kept_sum
-        ), mid
-        checked += 1
-        if checked >= 60:
-            break
-    assert checked >= 50
 
 
 def test_connected_hex_sanity(spark, sf_small):
