@@ -1584,80 +1584,83 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     greedy loop as a recursive CTE carrying the picked set as a list.
 
     Scale: candidate generation is the brute-force top-k (L9's shape
-    — ANN-bucketed at 100 TB); everything after operates on the
-    candidate pool only (50 rows, 2,450 pair sims), so the greedy
-    loop's cost is independent of corpus size. Each of the 9
-    iterations is a tiny distributed job over the broadcast pair-sim
-    frame; `localCheckpoint` pins the selected set per step to keep
-    the lazy plan linear (the data never reaches the driver).
+    — ANN-bucketed at 100 TB), planned as one TakeOrderedAndProject;
+    everything after operates on the candidate pool only (50 rows),
+    so the greedy loop's cost is independent of corpus size. It runs
+    as one single-partition kernel (mmr_greedy) inside the plan, the
+    same driver-adjacent small-data step as q_power_iteration_pc's
+    solver: building the query starts no Spark job.
+
+    A vector whose relevance is NULL (a NULL embedding or element, or a
+    length other than the query's) leaves the pool, as a NULL
+    embedding leaves the oracle's; a NULL query embedding gives an
+    empty result on both sides. Every pooled vector is then a full
+    row of integers for the kernel.
     """
-    from .llm import _vec_double
-
-    def dot(a: str, b: str):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0).cast("long"),
-            lambda s, t: s + t,
-        )
-
     e = load(spark, sf_dir, "embeddings")
     vec = e.select("vec_id", quantize_micro(_vec_double()).alias("xq"))
     qv = vec.filter(F.col("vec_id") == 0).select(F.col("xq").alias("qx"))
-    cand = (
+    rel = F.aggregate(
+        F.zip_with("xq", "qx", lambda x, y: x * y),
+        F.lit(0).cast("long"),
+        lambda s, t: s + t,
+    )
+    return (
         vec.filter(F.col("vec_id") != 0)
         .join(F.broadcast(qv))
-        .select(F.col("vec_id").alias("id"), dot("xq", "qx").alias("rel"), "xq")
+        .select(F.col("vec_id").alias("id"), rel.alias("rel"), "xq")
+        .filter(F.col("rel").isNotNull())
         .orderBy(F.col("rel").desc(), F.col("id").asc())
         .limit(MMR_CANDS)
-        .localCheckpoint(eager=True)
+        .coalesce(1)
+        .mapInPandas(mmr_greedy, "rank long, vec_id long, mmr_score long")
     )
-    a = cand.select(F.col("id").alias("a"), F.col("xq").alias("xa"))
-    b = cand.select(F.col("id").alias("b"), F.col("xq").alias("xb"))
-    ps = (
-        a.join(F.broadcast(b), F.col("a") != F.col("b"))
-        .select("a", "b", dot("xa", "xb").alias("sim"))
-        .localCheckpoint(eager=True)
+
+
+def mmr_greedy(batches):
+    """q_mmr_rerank's greedy re-rank over the whole candidate pool
+    (``id``, ``rel``, ``xq`` batches, one partition): yields ONE frame
+    of (rank, vec_id, mmr_score), K_MMR rows or as many as the pool
+    holds (empty for an empty pool).
+
+    Pick 1 is the relevance argmax, scored 7·rel; each later pick is
+    the free candidate maximizing 7·rel − 3·(max similarity to the
+    picks so far), kept as a running max vector over rows of the exact
+    int64 similarity matrix S = X·Xᵀ. Ties go to the smaller id.
+
+    Overflow headroom (as for rel, the same long dot in the plan):
+    unit-range embeddings give |x| ≤ 1e6 after micro-quantization, so
+    |S| ≤ 64·1e12 = 6.4e13 and every |score| ≤ 10·6.4e13 — four
+    orders of magnitude under int64 (the fixtures stay under 0.6)."""
+    import numpy as np
+    import pandas as pd
+
+    pool = [pdf for pdf in batches if len(pdf)]
+    picks, scores = [], []
+    if pool:
+        c = pd.concat(pool, ignore_index=True)
+        ids = c["id"].to_numpy(np.int64)
+        gain = _MMR_REL_W * c["rel"].to_numpy(np.int64)
+        X = np.array(c["xq"].tolist(), dtype=np.int64)
+        S = X @ X.T
+        free = np.ones(len(ids), dtype=bool)
+        score = gain
+        for _ in range(min(K_MMR, len(ids))):
+            cand = np.flatnonzero(free)
+            best = cand[score[cand] == score[cand].max()]
+            i = best[np.argmin(ids[best])]
+            picks.append(ids[i])
+            scores.append(score[i])
+            free[i] = False
+            msim = S[i] if len(picks) == 1 else np.maximum(msim, S[i])
+            score = gain - _MMR_DIV_W * msim
+    yield pd.DataFrame(
+        {
+            "rank": np.arange(1, len(picks) + 1, dtype=np.int64),
+            "vec_id": np.array(picks, dtype=np.int64),
+            "mmr_score": np.array(scores, dtype=np.int64),
+        }
     )
-    rel = cand.select("id", "rel")
-    selected = (
-        rel.orderBy(F.col("rel").desc(), F.col("id").asc())
-        .limit(1)
-        .select(
-            F.lit(1).cast("long").alias("rank"),
-            F.col("id").alias("vec_id"),
-            (F.lit(_MMR_REL_W) * F.col("rel")).alias("mmr_score"),
-        )
-    )
-    for step in range(2, K_MMR + 1):
-        selected = selected.localCheckpoint(eager=True)
-        sel_ids = selected.select(F.col("vec_id").alias("b"))
-        maxsim = (
-            ps.join(F.broadcast(sel_ids), "b")
-            .groupBy("a")
-            .agg(F.max("sim").alias("msim"))
-        )
-        pick = (
-            rel.join(
-                selected.select(F.col("vec_id").alias("id")), "id", "left_anti"
-            )
-            .join(maxsim, F.col("id") == F.col("a"))
-            .select(
-                "id",
-                (
-                    F.lit(_MMR_REL_W) * F.col("rel")
-                    - F.lit(_MMR_DIV_W) * F.col("msim")
-                ).alias("score"),
-            )
-            .orderBy(F.col("score").desc(), F.col("id").asc())
-            .limit(1)
-            .select(
-                F.lit(step).cast("long").alias("rank"),
-                F.col("id").alias("vec_id"),
-                F.col("score").alias("mmr_score"),
-            )
-        )
-        selected = selected.union(pick)
-    return selected
 
 
 SW_HEAD = 240  # align first N chars (head alignment)
@@ -2099,6 +2102,36 @@ SUBSTR_K = 12  # tokens per window (Lee et al. use 50 BPE tokens; the
 #                fixture's ≤257-token docs get a proportionate window)
 
 
+def _window_hashes(spark: SparkSession, sf_dir: str, generator) -> DataFrame:
+    """doc_id plus ``generator`` (an aliased explode or posexplode)
+    over the array of ``h60`` hashes of each document's SUBSTR_K-token
+    windows, in token order — the stream X51 and X53 elect window
+    owners over. The ×(|doc|−K+1) explode happens AFTER a doc_id
+    repartition, so the wide rows never cross an exchange (the
+    winnowing lesson, textpipe.py:243). The generator is applied to
+    the hash expression itself: exploding a projected array column
+    instead lets Catalyst infer a non-empty filter on it below the
+    repartition, hashing every window twice."""
+    d = load(spark, sf_dir, "documents").select(
+        "doc_id", F.split("text", " ").alias("t")
+    )
+    return (
+        d.filter(F.size("t") >= SUBSTR_K)
+        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
+        .select(
+            "doc_id",
+            generator(
+                F.transform(
+                    F.sequence(F.lit(1), F.size("t") - (SUBSTR_K - 1)),
+                    lambda p: h60(
+                        F.concat_ws(" ", F.slice(F.col("t"), p, SUBSTR_K))
+                    ),
+                )
+            ),
+        )
+    )
+
+
 @register(
     "q_substring_dedup",
     oracle=f"""
@@ -2150,9 +2183,8 @@ def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (1) per-(window, doc) occurrence counts — the map-side combine
     collapses within-doc repeats BEFORE the shuffle; (2) a
     window-keyed MIN to elect the owner; (3) the per-doc rollup.
-    The ×(|doc|−K+1) window explode happens AFTER a doc_id
-    repartition, so the wide rows never cross an exchange (the
-    winnowing lesson, textpipe.py:243).
+    The window stream is _window_hashes (explode after a doc_id
+    repartition).
 
     Windows are hashed with the portable ``h60`` (md5-based) so the
     values cross the oracle boundary; a production deployment would
@@ -2170,26 +2202,11 @@ def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     calls (the C-Counter trick that saved wordcount does not apply —
     hashing, not counting, is the hot loop here).
     """
-    par = spark.sparkContext.defaultParallelism
-    d = load(spark, sf_dir, "documents").select(
-        "doc_id", F.split("text", " ").alias("t")
+    wdoc = (
+        _window_hashes(spark, sf_dir, lambda a: F.explode(a).alias("wh"))
+        .groupBy("wh", "doc_id")
+        .agg(F.count(F.lit(1)).alias("occ"))
     )
-    wins = (
-        d.filter(F.size("t") >= SUBSTR_K)
-        .repartition(par, "doc_id")
-        .select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("t") - (SUBSTR_K - 1)),
-                    lambda p: h60(
-                        F.concat_ws(" ", F.slice(F.col("t"), p, SUBSTR_K))
-                    ),
-                )
-            ).alias("wh"),
-        )
-    )
-    wdoc = wins.groupBy("wh", "doc_id").agg(F.count(F.lit(1)).alias("occ"))
     owned = wdoc.withColumn(
         "owner", F.min("doc_id").over(Window.partitionBy("wh"))
     )
@@ -2349,28 +2366,13 @@ def q_dup_span_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed exchange); the island sweep is two doc_id-partitioned
     window passes over only the DUPLICATED positions (lag + running
     sum — bounded by dup density, not corpus size). Same
-    shuffle-before-expansion discipline: the position explode happens
-    after a doc_id repartition.
+    shuffle-before-expansion discipline: the window stream is
+    X51's _window_hashes.
     """
-    par = spark.sparkContext.defaultParallelism
-    d = load(spark, sf_dir, "documents").select(
-        "doc_id", F.split("text", " ").alias("t")
-    )
     wins = (
-        d.filter(F.size("t") >= SUBSTR_K)
-        .repartition(par, "doc_id")
-        .select(
-            "doc_id",
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size("t") - (SUBSTR_K - 1)),
-                    lambda p: h60(
-                        F.concat_ws(" ", F.slice(F.col("t"), p, SUBSTR_K))
-                    ),
-                )
-            ).alias("pos0", "wh"),
-        )
-        .select("doc_id", (F.col("pos0") + 1).alias("pos"), "wh")
+        _window_hashes(
+            spark, sf_dir, lambda a: F.posexplode(a).alias("pos0", "wh")
+        ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "wh")
     )
     owned = wins.withColumn(
         "owner", F.min("doc_id").over(Window.partitionBy("wh"))

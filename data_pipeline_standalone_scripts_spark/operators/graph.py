@@ -393,6 +393,14 @@ def q_shortest_path_bf(spark: SparkSession, sf_dir: str) -> DataFrame:
     frontier never materializes on the driver. Unbounded SSSP
     iterates to fixpoint with convergence detection; the bounded
     form is the oracle-checkable core.
+
+    Building it runs jobs: the edges and each round's distances are
+    pinned with ``localCheckpoint(eager=True)``. The lazy unroll (the
+    same loop without the checkpoints) gives equal output but its plan
+    doubles per hop — each round's distances feed both the union and
+    the relaxation join — and it was slower: build + toPandas at
+    sf0.1, 4 cores, 3 alternating warm rounds, 5.45–6.48 s lazy vs
+    4.56–5.07 s eager.
     """
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     l2 = li.select(

@@ -240,7 +240,7 @@ def _hex_cartesian(sq, sr, sqq, srr, sqr):
     """Axial → cartesian change of basis of the moment sums (x = q +
     r/2, y = (√3/2)·r at unit pitch): Sx = Sq + Sr/2, Sy = (√3/2)Sr,
     Sxx = Sqq + Sqr + Srr/4, Syy = ¾Srr, Sxy = (√3/2)(Sqr + Srr/2) —
-    term for term the oracles' _hex_ellipse_sql."""
+    term for term the oracles' _HEX_CARTESIAN_SQL."""
     half_r3 = F.sqrt(F.lit(3.0)) / 2
     return (
         sq + sr / 2,
@@ -379,7 +379,7 @@ def _ellipse(s0d: Column, sx, sy, sxx, syy, sxy) -> list[Column]:
     eigen-decomposition — length (major-axis RMS), width (minor, its
     tiny-negative float eigenvalue guarded with GREATEST(·, 0)) and
     psi = atan2(2·vxy, vxx−vyy)/2, each rounded to 6 decimals. The one
-    Spark-side copy of the tree the oracles spell in SQL."""
+    Spark-side copy of the tree; _ellipse_sql is its oracle twin."""
     cx = sx / s0d
     cy = sy / s0d
     vxx = sxx / s0d - cx * cx
@@ -401,6 +401,67 @@ def _camera_ellipse(camera: _Camera) -> list[Column]:
     """_ellipse over a _moment_sums frame of ``camera``."""
     s = [F.col(c).cast("double") for c in _SUM_COLS]
     return _ellipse(F.col("s0").cast("double"), *camera.cartesian(*s))
+
+
+# The cartesian moment sums (Sx, Sy, Sxx, Syy, Sxy) as oracle SQL over
+# each camera's integer sums: _square_cartesian and _hex_cartesian,
+# term for term.
+_SQUARE_CARTESIAN_SQL = tuple(
+    f"CAST({c} AS DOUBLE)" for c in ("sx", "sy", "sxx", "syy", "sxy")
+)
+_HEX_CARTESIAN_SQL = (
+    "CAST(sq AS DOUBLE) + CAST(sr AS DOUBLE) / 2",
+    "(sqrt(3) / 2) * CAST(sr AS DOUBLE)",
+    "CAST(sqq AS DOUBLE) + CAST(sqr AS DOUBLE) + CAST(srr AS DOUBLE) / 4",
+    "0.75 * CAST(srr AS DOUBLE)",
+    "(sqrt(3) / 2) * (CAST(sqr AS DOUBLE) + CAST(srr AS DOUBLE) / 2)",
+)
+
+
+def _ellipse_sql(
+    src: str, cartesian: tuple[str, ...], carry: tuple[str, ...] = ()
+) -> str:
+    """Oracle-side Hillas ellipse over ``src`` (must expose doc_id,
+    n_kept, s0, ``carry`` and the sums the five ``cartesian``
+    expressions read); yields doc_id, n_kept, s0, carry…, cog_x,
+    cog_y, length, width, psi. The one SQL copy of _ellipse's tree,
+    shared by the four Hillas/pipeline oracles: the bit-identity bet
+    needs every oracle to spell the covariance/eigen chain exactly as
+    _ellipse does."""
+    msx, msy, msxx, msyy, msxy = cartesian
+    c = "".join(f"{x}, " for x in carry)
+    return f"""(
+            SELECT doc_id, n_kept, s0, {c}
+                   ROUND(cx, 6) AS cog_x,
+                   ROUND(cy, 6) AS cog_y,
+                   ROUND(sqrt((vxx + vyy + rr) / 2), 6) AS length,
+                   ROUND(sqrt(GREATEST((vxx + vyy - rr) / 2, 0.0)), 6)
+                       AS width,
+                   ROUND(atan2(2 * vxy, vxx - vyy) / 2, 6) AS psi
+            FROM (
+                SELECT *,
+                       sqrt((vxx - vyy) * (vxx - vyy) + 4 * vxy * vxy) AS rr
+                FROM (
+                    SELECT *,
+                           msxx / s0d - cx * cx AS vxx,
+                           msyy / s0d - cy * cy AS vyy,
+                           msxy / s0d - cx * cy AS vxy
+                    FROM (
+                        SELECT *, msx / s0d AS cx, msy / s0d AS cy
+                        FROM (
+                            SELECT doc_id, n_kept, s0, {c}
+                                   CAST(s0 AS DOUBLE) AS s0d,
+                                   {msx} AS msx,
+                                   {msy} AS msy,
+                                   {msxx} AS msxx,
+                                   {msyy} AS msyy,
+                                   {msxy} AS msxy
+                            FROM {src}
+                        )
+                    )
+                )
+            )
+        )"""
 
 
 def _hillas(spark: SparkSession, sf_dir: str, camera: _Camera) -> DataFrame:
@@ -792,46 +853,6 @@ def q_connected_hex(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _connected(spark, sf_dir, HEX)
 
 
-def _hex_ellipse_sql(src: str, carry: tuple[str, ...] = ()) -> str:
-    """Oracle-side axial→cartesian + covariance/eigen chain over
-    ``src`` (must expose doc_id, n_kept, s0, sq, sr, sqq, srr, sqr
-    plus ``carry``); yields doc_id, n_kept, s0, carry…, cx, cy, vxx,
-    vyy, vxy, rr. ONE copy of the SQL expression tree shared by the
-    X71/X72 oracles, mirroring _hex_cartesian + _ellipse term for term —
-    the bit-identity bet requires the fused and staged ops to stay
-    textually synchronized, so there is exactly one text (r11 review
-    #4)."""
-    c = "".join(f"{x}, " for x in carry)
-    return f"""(
-            SELECT *,
-                   sqrt((vxx - vyy) * (vxx - vyy) + 4 * vxy * vxy) AS rr
-            FROM (
-                SELECT doc_id, n_kept, s0, {c}cx, cy,
-                       msxx / s0d - cx * cx AS vxx,
-                       msyy / s0d - cy * cy AS vyy,
-                       msxy / s0d - cx * cy AS vxy
-                FROM (
-                    SELECT *,
-                           msx / s0d AS cx,
-                           msy / s0d AS cy
-                    FROM (
-                        SELECT doc_id, n_kept, s0, {c}
-                               CAST(s0 AS DOUBLE) AS s0d,
-                               CAST(sq AS DOUBLE)
-                                   + CAST(sr AS DOUBLE) / 2 AS msx,
-                               (sqrt(3) / 2) * CAST(sr AS DOUBLE) AS msy,
-                               CAST(sqq AS DOUBLE) + CAST(sqr AS DOUBLE)
-                                   + CAST(srr AS DOUBLE) / 4 AS msxx,
-                               (sqrt(3) / 2) * (CAST(sqr AS DOUBLE)
-                                   + CAST(srr AS DOUBLE) / 2) AS msxy,
-                               0.75 * CAST(srr AS DOUBLE) AS msyy
-                        FROM {src}
-                    )
-                )
-            )
-        )"""
-
-
 @register(
     "q_hillas_hex",
     oracle=f"""
@@ -858,12 +879,9 @@ def _hex_ellipse_sql(src: str, carry: tuple[str, ...] = ()) -> str:
             GROUP BY doc_id
         )
         SELECT doc_id AS media_id, n_kept, s0 AS size,
-               ROUND(cx, 6) AS cog_x,
-               ROUND(cy, 6) AS cog_y,
-               ROUND(sqrt((vxx + vyy + rr) / 2), 6) AS length,
-               ROUND(sqrt(GREATEST((vxx + vyy - rr) / 2, 0.0)), 6) AS width,
-               ROUND(atan2(2 * vxy, vxx - vyy) / 2, 6) AS psi
-        FROM {_hex_ellipse_sql("(SELECT * FROM sums WHERE n_kept >= 3)")}
+               cog_x, cog_y, length, width, psi
+        FROM {_ellipse_sql("(SELECT * FROM sums WHERE n_kept >= 3)",
+                           _HEX_CARTESIAN_SQL)}
     """,
     category=CAT,
 )
@@ -1274,39 +1292,24 @@ def q_atrous_ksigma(spark: SparkSession, sf_dir: str) -> DataFrame:
         ), feats AS (
             SELECT *,
                    n_core + n_rescued AS n_kept,
-                   CAST(sx AS DOUBLE) / s0 AS cx,
-                   CAST(sy AS DOUBLE) / s0 AS cy,
                    CAST(round(CAST(e_in - e_kept AS DOUBLE) * 1000000
                               / n_pixels) AS BIGINT) AS mse_micro,
                    CAST(round(CAST(e_kept AS DOUBLE) * 1000000
                               / e_in) AS BIGINT) AS energy_ppm
             FROM sums
             WHERE n_core + n_rescued >= 3
-        ), ellipse AS (
-            SELECT *,
-                   sqrt((vxx - vyy) * (vxx - vyy) + 4 * vxy * vxy) AS rr
-            FROM (
-                SELECT *,
-                       CAST(sxx AS DOUBLE) / s0 - cx * cx AS vxx,
-                       CAST(syy AS DOUBLE) / s0 - cy * cy AS vyy,
-                       CAST(sxy AS DOUBLE) / s0 - cx * cy AS vxy
-                FROM feats
-            )
         )
         SELECT doc_id AS media_id, n_pixels, n_core, n_rescued, n_kept,
-               s0 AS size,
-               ROUND(cx, 6) AS cog_x,
-               ROUND(cy, 6) AS cog_y,
-               ROUND(sqrt((vxx + vyy + rr) / 2), 6) AS length,
-               ROUND(sqrt(GREATEST((vxx + vyy - rr) / 2, 0.0)), 6) AS width,
-               ROUND(atan2(2 * vxy, vxx - vyy) / 2, 6) AS psi,
+               s0 AS size, cog_x, cog_y, length, width, psi,
                ROUND(CAST(e_in - e_kept AS DOUBLE) / n_pixels, 6) AS mse,
                ROUND(CAST(e_kept AS DOUBLE) / e_in, 6) AS energy_ratio,
                '{{"media_id":' || doc_id || ',"n_kept":' || n_kept
                    || ',"size":' || s0
                    || ',"mse_micro":' || mse_micro
                    || ',"energy_ppm":' || energy_ppm || '}}' AS score_json
-        FROM ellipse
+        FROM {_ellipse_sql("feats", _SQUARE_CARTESIAN_SQL,
+                           ("n_pixels", "n_core", "n_rescued", "e_in",
+                            "e_kept", "mse_micro", "energy_ppm"))}
     """,
     category=CAT,
 )
@@ -1395,49 +1398,18 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
                               / e_in) AS BIGINT) AS energy_ppm
             FROM sums
             WHERE n_core + n_rescued >= 3
-        ), cart AS (
-            SELECT *,
-                   CAST(s0 AS DOUBLE) AS s0d,
-                   CAST(sq AS DOUBLE) + CAST(sr AS DOUBLE) / 2 AS msx,
-                   (sqrt(3) / 2) * CAST(sr AS DOUBLE) AS msy,
-                   CAST(sqq AS DOUBLE) + CAST(sqr AS DOUBLE)
-                       + CAST(srr AS DOUBLE) / 4 AS msxx,
-                   (sqrt(3) / 2) * (CAST(sqr AS DOUBLE)
-                       + CAST(srr AS DOUBLE) / 2) AS msxy,
-                   0.75 * CAST(srr AS DOUBLE) AS msyy
-            FROM feats
-        ), ellipse AS (
-            SELECT *,
-                   sqrt((vxx - vyy) * (vxx - vyy) + 4 * vxy * vxy) AS rr
-            FROM (
-                SELECT *,
-                       msxx / s0d - cx * cx AS vxx,
-                       msyy / s0d - cy * cy AS vyy,
-                       msxy / s0d - cx * cy AS vxy
-                FROM (
-                    SELECT *,
-                           msx / s0d AS cx,
-                           msy / s0d AS cy
-                    FROM cart
-                )
-            )
         )
         SELECT doc_id AS media_id, n_pix, n_core, n_rescued, n_kept,
-               s0 AS size,
-               ROUND(cx, 6) AS cog_x,
-               ROUND(cy, 6) AS cog_y,
-               ROUND(sqrt((vxx + vyy + rr) / 2), 6) AS length,
-               ROUND(sqrt(GREATEST((vxx + vyy - rr) / 2, 0.0)), 6) AS width,
-               ROUND(atan2(2 * vxy, vxx - vyy) / 2, 6) AS psi,
+               s0 AS size, cog_x, cog_y, length, width, psi,
                ROUND(CAST(e_in - e_kept AS DOUBLE) / n_pix, 6) AS mse,
                ROUND(CAST(e_kept AS DOUBLE) / e_in, 6) AS energy_ratio,
                '{{"media_id":' || doc_id || ',"n_kept":' || n_kept
                    || ',"size":' || s0
                    || ',"mse_micro":' || mse_micro
                    || ',"energy_ppm":' || energy_ppm || '}}' AS score_json
-        FROM {_hex_ellipse_sql("feats", ("n_pix", "n_core", "n_rescued",
-                                         "e_in", "e_kept", "mse_micro",
-                                         "energy_ppm"))}
+        FROM {_ellipse_sql("feats", _HEX_CARTESIAN_SQL,
+                           ("n_pix", "n_core", "n_rescued", "e_in",
+                            "e_kept", "mse_micro", "energy_ppm"))}
     """,
     category=CAT,
 )
@@ -1495,28 +1467,9 @@ _HILLAS_SUMS = """
             FROM px
         ),{_HILLAS_SUMS}
         SELECT doc_id AS media_id, n_kept, s0 AS size,
-               ROUND(cx, 6) AS cog_x,
-               ROUND(cy, 6) AS cog_y,
-               ROUND(sqrt((vxx + vyy + rr) / 2), 6) AS length,
-               ROUND(sqrt(GREATEST((vxx + vyy - rr) / 2, 0.0)), 6) AS width,
-               ROUND(atan2(2 * vxy, vxx - vyy) / 2, 6) AS psi
-        FROM (
-            SELECT *,
-                   sqrt((vxx - vyy) * (vxx - vyy) + 4 * vxy * vxy) AS rr
-            FROM (
-                SELECT doc_id, n_kept, s0, cx, cy,
-                       CAST(sxx AS DOUBLE) / s0 - cx * cx AS vxx,
-                       CAST(syy AS DOUBLE) / s0 - cy * cy AS vyy,
-                       CAST(sxy AS DOUBLE) / s0 - cx * cy AS vxy
-                FROM (
-                    SELECT *,
-                           CAST(sx AS DOUBLE) / s0 AS cx,
-                           CAST(sy AS DOUBLE) / s0 AS cy
-                    FROM sums
-                )
-            )
-        )
-        WHERE n_kept >= 3
+               cog_x, cog_y, length, width, psi
+        FROM {_ellipse_sql("(SELECT * FROM sums WHERE n_kept >= 3)",
+                           _SQUARE_CARTESIAN_SQL)}
     """,
     category=CAT,
 )

@@ -2,7 +2,9 @@
 
 Every operator from SURVEY.md §2 registers here with:
 - a Spark implementation ``fn(spark, sf_dir) -> DataFrame`` (lazy —
-  the driver executes it), and
+  the driver executes it; building starts no Spark job, except in the
+  queries ``EAGER_BUILDS`` in tests/test_guards.py lists, each with
+  the reason it stays eager), and
 - its DuckDB oracle SQL (or None for T2w ops, which get the
   driver's weaker rows-only check).
 

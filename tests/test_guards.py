@@ -8,7 +8,8 @@ path actually executes — the shipped fixtures never hit these edges.
 The session-state guards at the end check that building a query
 leaves the caller's session as it found it: no temp views, no
 session-conf writes, no files in the checkout, no directory shared
-between two builds, and no release reaching another thread's build.
+between two builds, no release reaching another thread's build, and
+no Spark job started except by the queries EAGER_BUILDS names.
 """
 
 import os
@@ -306,6 +307,55 @@ def test_hex_builds_leave_no_driver_temp_files(spark, sf_small):
             REGISTRY[name].fn(spark, sf_small)
         assert len(run(name, spark, sf_small)) > 400, name
     assert _driver_temp_files(spark) - before == set()
+
+
+# The queries whose build starts Spark jobs, each with the reason it
+# stays eager. Every other registered query builds only a plan.
+EAGER_BUILDS = {
+    **dict.fromkeys(
+        SCANS_IO, "writes its fixture and reads it back: the sink is what it tests"
+    ),
+    "q_stat_crosstab": "DataFrame.stat.crosstab is eager by API",
+    "q_sql_scripting": "a SQL script executes inside spark.sql",
+    "q_dedup_clusters": "its fixpoint test needs an action per round",
+    "q_shortest_path_bf": "a lazy unroll doubles the plan per hop and ran slower",
+    "q_bpe_merge": "its lazy argmax measured 1.24-1.39 s vs ~0.55 s at sf0.1",
+    "q_cosine_topk": "benchmarked; a lazy one-row broadcast join was no faster",
+    "q_bm25_rank": "benchmarked; collects its corpus statistics on the driver",
+    "q_kmeans_embed": "benchmarked; clustering._lloyd runs Lloyd on the driver",
+    "q_semantic_dedup": "runs q_kmeans_embed's driver-side clustering._lloyd",
+}
+
+
+def test_building_a_query_starts_no_spark_job(spark, sf_small):
+    """Build every registered query once inside its own job group and
+    count the jobs the group started: zero, except for the queries in
+    EAGER_BUILDS, which must each still start one (a stale entry
+    fails, so the list only shrinks). Every table's scan handle is
+    warmed first, because a cold tables.load runs one schema-inference
+    job."""
+    from data_pipeline_standalone_scripts_spark.tables import TABLES, load
+
+    for table in TABLES:
+        load(spark, sf_small, table)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    jobs = {}
+    for name in sorted(REGISTRY):
+        group = f"test-build-jobs/{name}"
+        sc.setJobGroup(group, name)
+        try:
+            REGISTRY[name].fn(spark, sf_small)
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description"):
+                sc.setLocalProperty(key, None)
+            common.release_persists()
+        jobs[name] = len(tracker.getJobIdsForGroup(group))
+    eager = {name for name, n in jobs.items() if n}
+    assert not eager - set(EAGER_BUILDS), {
+        n: jobs[n] for n in sorted(eager - set(EAGER_BUILDS))
+    }
+    assert not set(EAGER_BUILDS) - eager, sorted(set(EAGER_BUILDS) - eager)
 
 
 # Disjoint SQL-form, fixture-writing and persisting queries, one thread
